@@ -225,7 +225,6 @@ def query_data(
     """
     from bigdatasearchpro_spark.operators.querystring import (
         parse_query_string,
-        query_string_filter,
         weighted_terms,
     )
     from pyspark.sql import functions as F
@@ -279,31 +278,7 @@ def query_data(
             (F.col("rank") > from_) & (F.col("rank") <= from_ + k)
         ).drop("rank")
 
-    docs = resolve_index(spark, index_name)
-    if routing is not None:
-        docs = apply_routing(spark, index_name, docs, routing)
-    specs = (
-        [text_col]
-        if isinstance(text_col, str)
-        else list(text_col)
-        if text_col is not None
-        else search.all_string_cols(docs)
-    )
-    boosted = search.parse_boosted_fields(specs)
-    fields = [n for n, _ in boosted]  # filter context is boost-invariant
-    # per-field analyzers from the index mapping (ES: each field is
-    # analyzed by ITS mapped analyzer; unmapped fields stay standard).
-    # When the search targets exactly one mapped field, scoring
-    # analysis follows it too; multi-field _all scoring stays standard
-    # (like ES's _all field, which has its own analyzer).
-    mapping = get_field_mapping(spark, index_name)
-    default_an = (
-        mapping.get(fields[0], "standard") if len(fields) == 1 else "standard"
-    )
-    matched = query_string_filter(
-        docs, query, default_field=fields, fields=fields,
-        analyzer=default_an, field_analyzers=mapping,
-    )
+    matched, specs, analyzer = _match(spark, index_name, query, text_col, routing)
     if sort is not None:
         # ES URI-search `sort=f1[:asc|desc][,f2...]`: relevance is not
         # computed (constant _score, like ES with a sort clause); the
@@ -312,7 +287,7 @@ def query_data(
         # tie-break last for determinism.
         sorts = _parse_sorts(sort)
         for f, _ in sorts:
-            if f not in docs.columns:
+            if f not in matched.columns:
                 raise ValueError(f"unknown sort field {f!r}")
         leads = [
             F.asc(f"sort_{f}") if asc else F.desc(f"sort_{f}") for f, asc in sorts
@@ -327,87 +302,75 @@ def query_data(
         )
         rows = page.collect()[from_:]
         return spark.createDataFrame(rows, page.schema) if rows else page.limit(0)
-    weighted = weighted_terms(parse_query_string(query), analyzer=default_an)
-    terms = [t for t, _ in weighted]
-    if not terms:
+    weighted = weighted_terms(parse_query_string(query), analyzer=analyzer)
+    if not weighted:
         # pure-filter query (e.g. only ranges/wildcards): constant score,
         # deterministic id order
-        from pyspark.sql import functions as F
-
         page = (
             matched.select(F.col(id_col), F.lit(0.0).alias("score"))
             .orderBy(id_col)
             .limit(from_ + k)
         )
         rows = page.collect()[from_:]
-        out = spark.createDataFrame(rows, page.schema) if rows else page.limit(0)
-        return out
-    if any(w != 1.0 for _, w in boosted):
-        # per-field boosts: each field scored as its own BM25 corpus,
-        # weighted, combined best-fields (ES default type); term ^N
-        # boosts multiply in. Page over the materialized <= from_+k
-        # rows, like search_paged.
-        top = search.search_topk_multifield(
-            matched,
-            " ".join(terms),
-            specs,
-            from_ + k,
-            id_col=id_col,
-            keep_zero_hits=True,
-            term_weights=[w for _, w in weighted],
-        )
-        from pyspark.sql.window import Window
-
-        ranked = top.withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy(F.desc("score"), F.asc(id_col))),
-        ).filter(F.col("rank") > from_)
-        if not highlight:
-            return ranked
-        from bigdatasearchpro_spark.operators.analyzers import (
-            highlight_alternates,
-        )
-
-        src = F.concat_ws(
-            " ", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in fields]
-        ).alias("__src")
-        # (?U): Java regex \w/\b are ASCII-only by default — the
-        # unicode flag makes cyrillic (russian analyzer) stems
-        # highlightable; ASCII behavior is unchanged
-        pattern = (
-            "(?iU)\\b("
-            + "|".join(highlight_alternates(terms, default_an))
-            + ")\\b"
-        )
-        hi = (
-            docs.select(F.col(id_col), src)
-            .join(F.broadcast(ranked.select(id_col)), id_col, "left_semi")
-            .select(
-                F.col(id_col),
-                F.regexp_replace(F.col("__src"), pattern, "<em>$1</em>").alias(
-                    "highlight"
-                ),
-            )
-        )
-        return ranked.join(F.broadcast(hi), id_col, "left").select(
-            id_col, "score", "rank", "highlight"
-        )
+        return spark.createDataFrame(rows, page.schema) if rows else page.limit(0)
     # keep_zero_hits: `matched` is already the query's filtered match
     # set — a doc matching only non-scoring clauses (wildcard/range)
     # must stay in the page at score 0 (ES returns it constant-scored),
-    # not vanish from results.
+    # not vanish from results. Boosted field specs rank per field
+    # (search_paged -> search_topk_multifield); term ^N boosts multiply in.
     return search.search_paged(
         matched,
-        " ".join(terms),
+        " ".join(t for t, _ in weighted),
         size=k,
         from_=from_,
         id_col=id_col,
-        text_col=fields,
+        text_col=specs,
         highlight=highlight,
         term_weights=[w for _, w in weighted],
         keep_zero_hits=True,
-        analyzer=default_an,
+        analyzer=analyzer,
     )
+
+
+def _match(
+    spark: SparkSession,
+    index_name: str,
+    query: str,
+    text_col: "str | list[str] | None",
+    routing: "str | None" = None,
+) -> "tuple[DataFrame, list[str], str]":
+    """The ``?q=`` filter on ONE index, shared by search and count:
+    ``(matched rows, field specs, analyzer)``. ``text_col=None`` means
+    every string column (ES ``_all``); specs may carry ``^boost``
+    suffixes, which filtering ignores. Per-field analyzers come from
+    the index mapping (ES: each field is analyzed by ITS mapped
+    analyzer; unmapped fields stay standard). When the search targets
+    exactly one field, the returned analyzer (for the query's scoring
+    terms) follows that field's mapping too; multi-field ``_all``
+    scoring stays standard (like ES's ``_all`` field, which has its own
+    analyzer)."""
+    from bigdatasearchpro_spark.operators.querystring import query_string_filter
+
+    docs = resolve_index(spark, index_name)
+    if routing is not None:
+        docs = apply_routing(spark, index_name, docs, routing)
+    specs = (
+        [text_col]
+        if isinstance(text_col, str)
+        else list(text_col)
+        if text_col is not None
+        else search.all_string_cols(docs)
+    )
+    fields = [n for n, _ in search.parse_boosted_fields(specs)]
+    mapping = get_field_mapping(spark, index_name)
+    analyzer = (
+        mapping.get(fields[0], "standard") if len(fields) == 1 else "standard"
+    )
+    matched = query_string_filter(
+        docs, query, default_field=fields, fields=fields,
+        analyzer=analyzer, field_analyzers=mapping,
+    )
+    return matched, specs, analyzer
 
 
 def get_field_mapping(spark: SparkSession, index_name: str) -> dict:
@@ -552,27 +515,15 @@ def get_index_data_count(
 ) -> int:
     """Doc count per index: declared-but-null in the reference.
     ``_all`` sums every catalog index (ES ``GET _all/_count``).
-    ``query`` counts only matching documents (ES ``_count?q=...`` —
-    the count is ONE aggregate over the filtered scan; no page, no
-    sort, the filter pushes down)."""
+    ``query`` counts only matching documents (ES ``_count?q=...``),
+    filtered exactly as :func:`query_data` filters — same field
+    resolution, same per-field analyzers from the mapping — and
+    counted by ONE aggregate over the filtered scan (no page, no sort,
+    the filter pushes down)."""
     def one(name: str) -> int:
-        docs = spark.table(name.lower())
-        if query:
-            from bigdatasearchpro_spark.operators.querystring import (
-                query_string_filter,
-            )
-
-            fields = (
-                [text_col]
-                if isinstance(text_col, str)
-                else list(text_col)
-                if text_col is not None
-                else search.all_string_cols(docs)
-            )
-            docs = query_string_filter(
-                docs, query, default_field=fields, fields=fields
-            )
-        return docs.count()
+        if not query:
+            return resolve_index(spark, name).count()
+        return _match(spark, name, query, text_col)[0].count()
 
     if index_name == "_all":
         return sum(one(n) for n in get_all_index(spark))

@@ -73,6 +73,12 @@ def dedup_last_write_wins(
       over millions of tiny (1-2 row) groups: ~80 s;
     - this iterated hash-agg/hash-join reduction: ~8 s.
 
+    An empty ``order_by`` skips the reduction: the winner per key is
+    the row with the extreme content fingerprint alone — one hash
+    aggregate plus the semi-join. Deterministic across runs and
+    partitionings, but NOT arrival order (the keyed bulk load's
+    no-write-order fallback).
+
     Identical duplicate rows (bit-equal content ⇒ equal fingerprint)
     all match the winning ``(key, fingerprint)``, so a final
     ``dropDuplicates([key, fingerprint])`` collapses them to the single
@@ -87,8 +93,6 @@ def dedup_last_write_wins(
     in ``tests/test_plans.py`` pins all of this: wide rows cross
     exactly ONE exchange, and no wide sort sits upstream of it).
     """
-    if not order_by:
-        raise ValueError("order_by must name at least one column")
     ext_fn = F.max if keep == "last" else F.min
     # Spark's xxhash64 SKIPS null inputs entirely, so hashing the bare
     # columns would make rows that differ only in WHICH column is null

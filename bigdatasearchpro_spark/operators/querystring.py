@@ -573,33 +573,6 @@ def query_string_filter(
     return fan_out(docs).filter(pred)
 
 
-def positive_terms(node, analyzer: str = "standard") -> list[str]:
-    """Analyzed terms of the non-negated Term/Phrase leaves — what the
-    URI-search path scores with after the boolean filter selects the
-    result set (wildcards/ranges filter but don't contribute a scoring
-    term, mirroring ES's constant-score treatment of them)."""
-    out: list[str] = []
-
-    def go(n, negated: bool) -> None:
-        if isinstance(n, (Term, Phrase)):
-            if not negated:
-                out.extend(analyze_query(n.text, analyzer))
-        elif isinstance(n, Not):
-            go(n.child, not negated)
-        elif isinstance(n, (And, Or)):
-            for c in n.children:
-                go(c, negated)
-
-    go(node, False)
-    seen: set[str] = set()
-    uniq = []
-    for t in out:
-        if t not in seen:
-            seen.add(t)
-            uniq.append(t)
-    return uniq
-
-
 def weighted_terms(node, analyzer: str = "standard") -> list[tuple[str, float]]:
     """Scoring terms with their ``^boost`` weights: the non-negated
     Term/Phrase leaves' analyzed terms, each weighted by its clause's

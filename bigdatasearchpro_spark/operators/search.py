@@ -13,11 +13,18 @@ Scale design (100 TB corpus):
   a SINGLE narrow filter over a per-row token array — no explode, no
   shuffle, fully inside whole-stage codegen. The predicate evaluates
   against a tiny literal term set per row.
-- Scored search (``search_topk``) is single-scan: one pass computes the
-  per-document (dl, tf_1..tf_k) integer projection (array expressions,
-  no explode), which is cached (ints only — ~20 bytes/doc, ~200 GB
-  cluster-wide at 10^10 docs) and reread for the corpus-stats aggregate
-  and the final top-k. The corpus text is scanned exactly once.
+- Scored search is ONE scorer, single-scan: one pass computes the
+  per-document (dl_j, tf_{j,1}..tf_{j,k}) integer projection over one
+  or more field groups (array expressions, no explode), which is cached
+  (ints only — ~20 bytes/doc, ~200 GB cluster-wide at 10^10 docs) and
+  reread for the one corpus-stats aggregate (N, avgdl_j, df_{j,i}) and
+  the final top-k; one function builds the BM25/TF-IDF score Column
+  from those stats. ``search_topk``, ``search_topk_multifield``,
+  ``function_score_topk`` (and ``boosting_topk``), ``collapse_topk``
+  and ``explain_score`` are thin callers of it, so they score
+  identically and the corpus text is scanned exactly once per query.
+  The stats aggregate is the one place a per-index stats cache would
+  go.
 - Expensive per-term predicates (fuzzy/regex) aggregate to the DISTINCT
   vocabulary first (|vocab| << token occurrences), match the vocabulary,
   then broadcast-semi-join doc ids back.
@@ -34,7 +41,11 @@ fields are all strings).
 
 from __future__ import annotations
 
+import math
+import operator
 import re
+from contextlib import contextmanager
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -135,39 +146,205 @@ def keyword_match(
     return fan_out(docs).filter(pred)
 
 
-def bm25_per_doc(
+# ---------------------------------------------------------------------------
+# The scorer: every scored search below is one pass of these four parts
+# ---------------------------------------------------------------------------
+
+
+def _per_doc(
     docs: DataFrame,
     terms: Sequence[str],
+    groups: Sequence,
     *,
-    id_col: str = "doc_id",
-    text_col: TextCols = "text",
+    id_col: str,
     analyzer: str = "standard",
     extra_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """The single-scan scoring projection: (id, dl, tf_0..tf_{k-1}) —
-    document length and per-query-term frequencies computed with array
-    expressions (tokenize once per row, count with ``F.filter``+``size``),
-    never exploding. Output is a few ints per document; persisting it is
-    what makes scored search one corpus scan."""
+    """The single-scan scoring projection: ``(id, extra_cols...,
+    dl_j, tf_{j,0}..tf_{j,k-1})`` for every field group ``j`` — document
+    length and per-query-term frequencies computed with array
+    expressions (tokenize once per row and group, count with
+    ``F.filter`` + ``size``), never exploding. A group is anything
+    :func:`tokens_expr` takes: one column, an ``_all`` column list, or a
+    Column. Output is a few ints per document; persisting it is what
+    makes scored search one corpus scan regardless of field count."""
     from bigdatasearchpro_spark.sources.files import fan_out
 
     def _eq(term):  # single-arg lambda: a 2-arg one would get (elem, idx)
         return lambda x: x == F.lit(term)
 
+    keep = [F.col(id_col), *[F.col(c) for c in extra_cols]]
     toked = fan_out(docs).select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        tokens_expr(text_col, analyzer).alias("__toks"),
+        *keep,
+        *[tokens_expr(g, analyzer).alias(f"__toks_{j}") for j, g in enumerate(groups)],
     )
-    return toked.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        F.size("__toks").cast("double").alias("dl"),
-        *[
-            F.size(F.filter("__toks", _eq(t))).alias(f"tf_{i}")
+    proj = list(keep)
+    for j in range(len(groups)):
+        proj.append(F.size(f"__toks_{j}").cast("double").alias(f"dl_{j}"))
+        proj.extend(
+            F.size(F.filter(f"__toks_{j}", _eq(t))).alias(f"tf_{j}_{i}")
             for i, t in enumerate(terms)
+        )
+    return toked.select(*proj)
+
+
+def _corpus_stats(per_doc: DataFrame, n_groups: int, n_terms: int):
+    """The corpus constants, one aggregate over the projection: ``n``,
+    per group ``avgdl_j``, and per (group, term) ``df_{j,i}`` — the
+    number of documents with ``tf > 0``."""
+    return per_doc.agg(
+        F.count("*").alias("n"),
+        *[F.avg(f"dl_{j}").alias(f"avgdl_{j}") for j in range(n_groups)],
+        *[
+            F.count(F.when(F.col(f"tf_{j}_{i}") > 0, 1)).alias(f"df_{j}_{i}")
+            for j in range(n_groups)
+            for i in range(n_terms)
         ],
+    ).first()
+
+
+@contextmanager
+def _scoring_pass(
+    docs: DataFrame,
+    terms: Sequence[str],
+    groups: Sequence,
+    *,
+    id_col: str,
+    analyzer: str = "standard",
+    extra_cols: Sequence[str] = (),
+):
+    """Persist the :func:`_per_doc` projection and aggregate its
+    :func:`_corpus_stats`; yields ``(per_doc, stats)``. The caller
+    collects its <= k-row result inside the block (:func:`_collect`);
+    the cache is released when the block exits, on error too."""
+    per_doc = _per_doc(
+        docs, terms, groups, id_col=id_col, analyzer=analyzer,
+        extra_cols=extra_cols,
     )
+    per_doc.persist()
+    try:
+        yield per_doc, _corpus_stats(per_doc, len(groups), len(terms))
+    finally:
+        per_doc.unpersist()
+
+
+def _collect(df: DataFrame) -> DataFrame:
+    """Materialize a small result while its :func:`_scoring_pass` cache
+    is still held."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+
+
+def _term_parts(stats, j: int, i: int, *, scoring: str, k1: float, b: float):
+    """``(idf, num, den)`` of query term ``i`` in field group ``j``: the
+    term contributes ``idf * num / den`` (``idf * num`` when ``den`` is
+    None), with ``num / den`` the tf-norm. None when the term cannot
+    score — no document has it, or the field is empty everywhere.
+
+    ``scoring='tfidf'``: idf = ln(N / df), tf-norm = tf.
+    ``scoring='bm25'`` : Robertson/ES-style
+        idf     = ln(1 + (N - df + 0.5) / (df + 0.5))
+        tf-norm = tf*(k1+1) / (tf + k1*(1 - b + b*len/avglen))"""
+    n_docs = float(stats["n"])
+    avgdl = float(stats[f"avgdl_{j}"] or 0.0)
+    dfi = float(stats[f"df_{j}_{i}"])
+    if dfi == 0 or avgdl == 0:
+        return None
+    tf = F.col(f"tf_{j}_{i}").cast("double")
+    if scoring == "tfidf":
+        return math.log(n_docs / dfi), tf, None
+    idf = math.log(1.0 + (n_docs - dfi + 0.5) / (dfi + 0.5))
+    dl_norm = 1.0 - b + b * F.col(f"dl_{j}") / F.lit(avgdl)
+    return idf, tf * (k1 + 1.0), tf + F.lit(k1) * dl_norm
+
+
+def _score(
+    stats,
+    n_terms: int,
+    *,
+    scoring: str = "bm25",
+    k1: float = 1.2,
+    b: float = 0.75,
+    boosts: Sequence[float] = (1.0,),
+    term_weights: "Sequence[float] | None" = None,
+    combine: str = "most_fields",
+    tie_breaker: float = 0.0,
+) -> "Column | None":
+    """The raw (unrounded) score Column over the projection, or None
+    when no query term occurs. Corpus constants fold in as literals, so
+    this is a narrow codegen'd expression. Each field group is its own
+    corpus (own avgdl and df, as ES scores per field); a group's score
+    sums ``boost * term_weight * idf * tf_norm`` over the terms it
+    contains (0 where tf = 0). Groups combine by ``most_fields`` (sum)
+    or ``best_fields`` (max, plus ``tie_breaker`` times the others —
+    ES dis_max)."""
+    if term_weights is not None and len(term_weights) != n_terms:
+        raise ValueError("term_weights must parallel the analyzed terms")
+    field_scores = []
+    for j, boost in enumerate(boosts):
+        contribs = []
+        for i in range(n_terms):
+            parts = _term_parts(stats, j, i, scoring=scoring, k1=k1, b=b)
+            if parts is None:
+                continue
+            idf, num, den = parts
+            w = 1.0 if term_weights is None else float(term_weights[i])
+            c = F.lit(boost * w * idf) * num
+            c = c if den is None else c / den
+            contribs.append(
+                F.when(F.col(f"tf_{j}_{i}") > 0, c).otherwise(F.lit(0.0))
+            )
+        if contribs:
+            field_scores.append(sum(contribs[1:], contribs[0]))
+    if not field_scores:
+        return None
+    total = sum(field_scores[1:], field_scores[0])
+    if combine == "most_fields":
+        return total
+    best = F.greatest(*field_scores) if len(field_scores) > 1 else total
+    if tie_breaker:
+        best = best + F.lit(float(tie_breaker)) * (total - best)
+    return best
+
+
+def _hits(
+    per_doc: DataFrame,
+    stats,
+    n_terms: int,
+    *,
+    id_col: str,
+    round_to: int,
+    cols: Sequence[str] = (),
+    factor: "Column | None" = None,
+    keep_zero_hits: bool = False,
+    boosts: Sequence[float] = (1.0,),
+    **score_kw,
+) -> DataFrame:
+    """``(id, cols..., score)`` for every document the query hits,
+    unsorted; ``score`` is :func:`_score` (times ``factor``) rounded to
+    ``round_to``. ``keep_zero_hits``: the input is already a filtered
+    match set (a query-string result), so documents matching only
+    non-scoring clauses (wildcard/range) stay at score 0 instead of
+    vanishing."""
+    out = [F.col(id_col), *[F.col(c) for c in cols]]
+    score = _score(stats, n_terms, boosts=boosts, **score_kw)
+    if score is None:
+        rows = per_doc if keep_zero_hits else per_doc.limit(0)
+        return rows.select(*out, F.lit(0.0).alias("score"))
+    if factor is not None:
+        score = score * factor
+    if not keep_zero_hits:
+        per_doc = per_doc.filter(reduce(operator.or_, [
+            F.col(f"tf_{j}_{i}") > 0
+            for j in range(len(boosts))
+            for i in range(n_terms)
+        ]))
+    return per_doc.select(*out, F.round(score, round_to).alias("score"))
+
+
+def _top(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The top-k page: (score desc, id asc) — a TakeOrdered, never a
+    global sort."""
+    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
 def search_topk(
@@ -201,146 +378,40 @@ def search_topk(
 
     ``term_weights`` (parallel to the analyzed query terms) multiplies
     each term's score contribution — the query-string ``term^boost``
-    surface. Default: all 1.0.
-
-    ``scoring='tfidf'``: score = sum_t tf(t,d) * ln(N / df(t)).
-    ``scoring='bm25'`` : Robertson/ES-style
-        idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5))
-        score  = sum_t idf * tf*(k1+1) / (tf + k1*(1 - b + b*len/avglen))
+    surface. Default: all 1.0. ``scoring`` is ``'bm25'`` or ``'tfidf'``
+    (formulas at :func:`_term_parts`).
 
     Deterministic: score rounded to ``round_to`` decimals and ties broken
     by ``id_col`` asc, so the result is oracle-comparable.
 
-    Single-scan: the corpus text is read ONCE into the cached
-    ``bm25_per_doc`` integer projection; the (N, avgdl, df_t) stats
+    Single-scan: the corpus text is read ONCE into the cached integer
+    projection (:func:`_scoring_pass`); the (N, avgdl, df_t) stats
     aggregate and the top-k job both read the cache. The result (k rows)
     is materialized so the cache can be released deterministically.
     """
     terms = analyze_query(query, analyzer)
-    spark = docs.sparkSession
     if not terms:
         return docs.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
     if scoring not in ("tfidf", "bm25"):
         raise ValueError(f"unknown scoring: {scoring}")
-
-    per_doc, topk = _topk_pipeline(
-        docs, terms, k, id_col=id_col, text_col=text_col,
-        scoring=scoring, k1=k1, b=b, round_to=round_to,
-        term_weights=term_weights, keep_zero_hits=keep_zero_hits,
-        after=after, analyzer=analyzer,
-    )
-    try:
-        rows, schema = topk.collect(), topk.schema
-    finally:
-        per_doc.unpersist()
-    return spark.createDataFrame(rows, schema)
-
-
-def _topk_pipeline(
-    docs: DataFrame,
-    terms: Sequence[str],
-    k: int,
-    *,
-    id_col: str,
-    text_col: TextCols,
-    scoring: str,
-    k1: float,
-    b: float,
-    round_to: int,
-    term_weights: "Sequence[float] | None" = None,
-    keep_zero_hits: bool = False,
-    after: "tuple[float, object] | None" = None,
-    analyzer: str = "standard",
-) -> tuple[DataFrame, DataFrame]:
-    """(persisted per-doc projection, lazy top-k over it). The stats
-    aggregate runs here (materializing the cache); the caller collects
-    the top-k and unpersists. Split out so plan tests can assert the
-    single-scan shape."""
-    per_doc = bm25_per_doc(
-        docs, terms, id_col=id_col, text_col=text_col, analyzer=analyzer
-    )
-    per_doc.persist()
-    stats = per_doc.agg(
-        F.count("*").alias("n"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.count(F.when(F.col(f"tf_{i}") > 0, 1)).alias(f"df_{i}")
-            for i in range(len(terms))
-        ],
-    ).first()
-    scored = _score_from_per_doc(
-        per_doc, terms, stats, scoring=scoring, k1=k1, b=b,
-        round_to=round_to, id_col=id_col, term_weights=term_weights,
-        keep_zero_hits=keep_zero_hits,
-    )
-    if after is not None:
-        s, i = after
-        # keyset on the (score desc, id asc) total order: strictly
-        # after the cursor. Map-side filter — the heap stays k-sized
-        # at any page depth (the ES search_after rationale).
-        scored = scored.filter(
-            (F.col("score") < F.lit(float(s)))
-            | ((F.col("score") == F.lit(float(s))) & (F.col(id_col) > F.lit(i)))
+    with _scoring_pass(
+        docs, terms, [text_col], id_col=id_col, analyzer=analyzer
+    ) as (per_doc, stats):
+        scored = _hits(
+            per_doc, stats, len(terms), id_col=id_col, round_to=round_to,
+            keep_zero_hits=keep_zero_hits, scoring=scoring, k1=k1, b=b,
+            term_weights=term_weights,
         )
-    topk = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    return per_doc, topk
-
-
-def _score_from_per_doc(
-    per_doc: DataFrame,
-    terms: Sequence[str],
-    stats,
-    *,
-    scoring: str,
-    k1: float,
-    b: float,
-    round_to: int,
-    id_col: str,
-    term_weights: "Sequence[float] | None" = None,
-    keep_zero_hits: bool = False,
-) -> DataFrame:
-    """Scoring expression over the per-doc projection — corpus constants
-    fold in as literals, so this is a narrow codegen'd projection."""
-    n_docs = float(stats["n"])
-    avgdl = float(stats["avgdl"] or 0.0)
-    import math
-
-    if term_weights is not None and len(term_weights) != len(terms):
-        raise ValueError("term_weights must parallel the analyzed terms")
-    parts = []
-    for i in range(len(terms)):
-        dfi = float(stats[f"df_{i}"])
-        if dfi == 0:
-            continue
-        w = 1.0 if term_weights is None else float(term_weights[i])
-        tf = F.col(f"tf_{i}").cast("double")
-        if scoring == "tfidf":
-            contrib = tf * F.lit(w * math.log(n_docs / dfi))
-        else:
-            idf = math.log(1.0 + (n_docs - dfi + 0.5) / (dfi + 0.5))
-            contrib = F.lit(w * idf) * (tf * (k1 + 1.0)) / (
-                tf + F.lit(k1) * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
+        if after is not None:
+            s, i = after
+            # keyset on the (score desc, id asc) total order: strictly
+            # after the cursor. Map-side filter — the heap stays k-sized
+            # at any page depth (the ES search_after rationale).
+            scored = scored.filter(
+                (F.col("score") < F.lit(float(s)))
+                | ((F.col("score") == F.lit(float(s))) & (F.col(id_col) > F.lit(i)))
             )
-        parts.append(F.when(F.col(f"tf_{i}") > 0, contrib).otherwise(F.lit(0.0)))
-    if not parts:
-        if keep_zero_hits:
-            return per_doc.select(F.col(id_col), F.lit(0.0).alias("score"))
-        return per_doc.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
-    total = parts[0]
-    for p in parts[1:]:
-        total = total + p
-    if keep_zero_hits:
-        # input is already a filtered match set (e.g. a query-string
-        # result): docs matching only non-scoring clauses (wildcard/
-        # range) stay in the ranking at score 0 instead of vanishing
-        return per_doc.select(F.col(id_col), F.round(total, round_to).alias("score"))
-    any_hit = None
-    for i in range(len(terms)):
-        c = F.col(f"tf_{i}") > 0
-        any_hit = c if any_hit is None else (any_hit | c)
-    return per_doc.filter(any_hit).select(
-        F.col(id_col), F.round(total, round_to).alias("score")
-    )
+        return _collect(_top(scored, k, id_col))
 
 
 def explain_score(
@@ -373,35 +444,30 @@ def explain_score(
     ``(id, term, tf, df, idf, tf_norm, contribution)``
 
     with ``contribution = idf * tf_norm`` (the ES 6.x / Lucene BM25
-    decomposition, (k1+1) folded into tf_norm exactly as
-    :func:`search_topk` scores it), each rounded to ``round_to``.  The
-    invariant tying this to the ranking: ``sum(contribution)`` equals
-    the document's ``search_topk`` score up to per-part rounding
-    (search rounds the SUM once; explain rounds each part).
+    decomposition, (k1+1) folded into tf_norm), each rounded to
+    ``round_to``.  The invariant tying this to the ranking:
+    ``sum(contribution)`` equals the document's ``search_topk`` score up
+    to per-part rounding (search rounds the SUM once; explain rounds
+    each part).
 
     An empty result means the document does not exist OR matches no
     term (``keep_nonmatching`` distinguishes the two: an existing
     document always yields one row per term).
 
-    Plan shape: the corpus stats (N, avgdl, df_t) are one aggregate
-    over the persisted :func:`bm25_per_doc` projection and the target
-    document is ONE filtered row of it — a single corpus scan total,
-    then driver-side arithmetic on a 1×k-term row (a per-document
-    debug endpoint is plan-bounded by construction; ES likewise
-    explains one doc on one shard)."""
-    import math
-
+    Plan shape: the same :func:`_scoring_pass` as :func:`search_topk`
+    — one corpus scan, one stats aggregate — and the target document
+    is ONE filtered row of the cached projection, on which the
+    scorer's own per-term tf-norm expressions (:func:`_term_parts`)
+    are evaluated (a per-document debug endpoint is plan-bounded by
+    construction; ES likewise explains one doc on one shard)."""
     from pyspark.sql import types as T
 
     if scoring not in ("tfidf", "bm25"):
         raise ValueError(f"unknown scoring: {scoring}")
     spark = docs.sparkSession
     terms = analyze_query(query, analyzer)
-    per_doc = bm25_per_doc(
-        docs, terms, id_col=id_col, text_col=text_col, analyzer=analyzer
-    )
     schema = T.StructType([
-        per_doc.schema[id_col],
+        docs.schema[id_col],
         T.StructField("term", T.StringType()),
         T.StructField("tf", T.LongType()),
         T.StructField("df", T.LongType()),
@@ -411,42 +477,32 @@ def explain_score(
     ])
     if not terms:
         return spark.createDataFrame([], schema)
-    per_doc.persist()
-    try:
-        stats = per_doc.agg(
-            F.count("*").alias("n"),
-            F.avg("dl").alias("avgdl"),
-            *[
-                F.count(F.when(F.col(f"tf_{i}") > 0, 1)).alias(f"df_{i}")
-                for i in range(len(terms))
-            ],
-        ).first()
-        row = per_doc.filter(F.col(id_col) == F.lit(doc_id)).first()
-    finally:
-        per_doc.unpersist()
+    with _scoring_pass(
+        docs, terms, [text_col], id_col=id_col, analyzer=analyzer
+    ) as (per_doc, stats):
+        parts = [
+            _term_parts(stats, 0, i, scoring=scoring, k1=k1, b=b)
+            for i in range(len(terms))
+        ]
+        cols = [F.col(id_col)]
+        for i, p in enumerate(parts):
+            cols.append(F.col(f"tf_0_{i}"))
+            if p is not None:
+                _, num, den = p
+                norm = num if den is None else num / den
+                cols.append(norm.alias(f"tf_norm_{i}"))
+        row = per_doc.filter(F.col(id_col) == F.lit(doc_id)).select(*cols).first()
     out = []
     if row is not None:
-        n_docs = float(stats["n"])
-        avgdl = float(stats["avgdl"] or 0.0)
-        dl = float(row["dl"])
         for i, t in enumerate(terms):
-            tf = int(row[f"tf_{i}"])
-            dfi = float(stats[f"df_{i}"])
-            if tf == 0 or dfi == 0:
+            tf, dfi = int(row[f"tf_0_{i}"]), int(stats[f"df_0_{i}"])
+            if tf == 0 or parts[i] is None:
                 if keep_nonmatching:
-                    out.append((row[id_col], t, tf, int(dfi),
-                                0.0, 0.0, 0.0))
+                    out.append((row[id_col], t, tf, dfi, 0.0, 0.0, 0.0))
                 continue
-            if scoring == "tfidf":
-                idf = math.log(n_docs / dfi)
-                tf_norm = float(tf)
-            else:
-                idf = math.log(1.0 + (n_docs - dfi + 0.5) / (dfi + 0.5))
-                tf_norm = (tf * (k1 + 1.0)) / (
-                    tf + k1 * (1.0 - b + b * dl / avgdl)
-                )
+            idf, tf_norm = parts[i][0], row[f"tf_norm_{i}"]
             out.append((
-                row[id_col], t, tf, int(dfi),
+                row[id_col], t, tf, dfi,
                 round(idf, round_to), round(tf_norm, round_to),
                 round(idf * tf_norm, round_to),
             ))
@@ -531,18 +587,37 @@ def search_paged(
     ranking, each with its rank and (optionally) a highlighted text
     fragment (query terms wrapped in ``pre_tag``/``post_tag``).
 
-    The ranking reuses :func:`search_topk` with ``k = from_ + size``
-    (top-k never global-sorts), so the page cost is the search cost plus
-    a broadcast join of <= from_+size ids back to the corpus for the
+    A ``text_col`` list may carry per-field boosts (``["title^3",
+    "text"]``, :func:`parse_boosted_fields`): then the ranking is
+    :func:`search_topk_multifield` (each field its own BM25 corpus,
+    combined best-fields), otherwise :func:`search_topk` over the
+    ``_all`` concatenation. Either runs with ``k = from_ + size`` (top-k
+    never global-sorts), so the page cost is the search cost plus a
+    broadcast join of <= from_+size ids back to the corpus for the
     highlight source text.
     """
     if from_ < 0 or size <= 0:
         raise ValueError("from_ must be >= 0 and size > 0")
-    top = search_topk(
-        docs, query, from_ + size, id_col=id_col, text_col=text_col,
-        scoring=scoring, term_weights=term_weights,
-        keep_zero_hits=keep_zero_hits, analyzer=analyzer,
+    specs = (
+        None if isinstance(text_col, (str, Column))
+        else parse_boosted_fields(text_col)
     )
+    if specs is not None:
+        fields, text_col = text_col, [n for n, _ in specs]
+    if specs and any(w != 1.0 for _, w in specs):
+        if scoring != "bm25":
+            raise ValueError("per-field boosts score with bm25 only")
+        top = search_topk_multifield(
+            docs, query, fields, from_ + size, id_col=id_col,
+            keep_zero_hits=keep_zero_hits, term_weights=term_weights,
+            analyzer=analyzer,
+        )
+    else:
+        top = search_topk(
+            docs, query, from_ + size, id_col=id_col, text_col=text_col,
+            scoring=scoring, term_weights=term_weights,
+            keep_zero_hits=keep_zero_hits, analyzer=analyzer,
+        )
     from pyspark.sql.window import Window
 
     # top is <= from_+size materialized rows: the single-partition
@@ -627,11 +702,13 @@ def search_topk_multifield(
       matching in SEVERAL fields outrank single-field ties;
     - ``combine='most_fields'``: the SUM of weighted field scores.
 
-    Single-scan like :func:`search_topk`: one pass tokenizes every
-    field into a per-doc integer projection (dl_j, tf_{j,i}), which is
-    persisted and reread by the stats aggregate and the top-k — the
-    corpus text is scanned once regardless of field count. Ties broken
-    by ``id_col`` asc after ``round_to`` rounding (oracle-comparable).
+    Single-scan like :func:`search_topk` — the same scorer with one
+    field group per field: one pass tokenizes every field into the
+    per-doc integer projection (dl_j, tf_{j,i}), which is persisted and
+    reread by the stats aggregate and the top-k — the corpus text is
+    scanned once regardless of field count. A NULL field scores 0. Ties
+    broken by ``id_col`` asc after ``round_to`` rounding
+    (oracle-comparable).
     """
     if combine not in ("best_fields", "most_fields"):
         raise ValueError(f"unknown combine: {combine!r}")
@@ -639,157 +716,21 @@ def search_topk_multifield(
         raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
     specs = parse_boosted_fields(fields)
     terms = analyze_query(query, analyzer)
-    spark = docs.sparkSession
     if not terms:
         return docs.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
-    per_doc, topk = _multifield_pipeline(
-        docs, terms, specs, k, id_col=id_col, combine=combine,
-        tie_breaker=tie_breaker, k1=k1, b=b,
-        round_to=round_to, keep_zero_hits=keep_zero_hits,
-        term_weights=term_weights, analyzer=analyzer,
-    )
-    try:
-        if topk is None:  # no term matched any field
-            if keep_zero_hits:
-                zero = per_doc.select(F.col(id_col), F.lit(0.0).alias("score"))
-                return spark.createDataFrame(
-                    zero.orderBy(id_col).limit(k).collect(), zero.schema
-                )
-            return docs.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
-        rows, schema = topk.collect(), topk.schema
-    finally:
-        per_doc.unpersist()
-    return spark.createDataFrame(rows, schema)
-
-
-def multifield_per_doc(
-    docs: DataFrame,
-    terms: Sequence[str],
-    names: Sequence[str],
-    *,
-    id_col: str,
-    analyzer: str = "standard",
-) -> DataFrame:
-    """The multi-field single-scan projection: (id, dl_j, tf_{j,i}) for
-    every (field j, term i) — one tokenizer pass per field, all inside
-    one narrow select over one corpus scan."""
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    def _eq(term):
-        return lambda x: x == F.lit(term)
-
     # each field as a 1-element list: the _text_expr list path wraps the
     # column in coalesce(, ''), so a NULL field scores 0 instead of
     # poisoning dl/tf with NULLs
-    toked = fan_out(docs).select(
-        F.col(id_col),
-        *[
-            tokens_expr([n], analyzer).alias(f"__toks_{j}")
-            for j, n in enumerate(names)
-        ],
-    )
-    proj = [F.col(id_col)]
-    for j in range(len(names)):
-        proj.append(F.size(f"__toks_{j}").cast("double").alias(f"dl_{j}"))
-        proj.extend(
-            F.size(F.filter(f"__toks_{j}", _eq(t))).alias(f"tf_{j}_{i}")
-            for i, t in enumerate(terms)
+    with _scoring_pass(
+        docs, terms, [[n] for n, _ in specs], id_col=id_col, analyzer=analyzer
+    ) as (per_doc, stats):
+        scored = _hits(
+            per_doc, stats, len(terms), id_col=id_col, round_to=round_to,
+            keep_zero_hits=keep_zero_hits, boosts=[w for _, w in specs],
+            k1=k1, b=b, term_weights=term_weights, combine=combine,
+            tie_breaker=tie_breaker,
         )
-    return toked.select(*proj)
-
-
-def _multifield_pipeline(
-    docs: DataFrame,
-    terms: Sequence[str],
-    specs: Sequence[tuple[str, float]],
-    k: int,
-    *,
-    id_col: str,
-    combine: str,
-    tie_breaker: float = 0.0,
-    k1: float,
-    b: float,
-    round_to: int,
-    keep_zero_hits: bool,
-    term_weights: "Sequence[float] | None",
-    analyzer: str = "standard",
-):
-    """(persisted per-doc projection, lazy top-k over it | None). The
-    stats aggregate runs here (materializing the cache); the caller
-    collects and unpersists. Split out so plan tests can assert the
-    single-scan shape (mirrors :func:`_topk_pipeline`)."""
-    import math
-
-    if term_weights is not None and len(term_weights) != len(terms):
-        raise ValueError("term_weights must parallel the analyzed terms")
-    names = [n for n, _ in specs]
-    per_doc = multifield_per_doc(
-        docs, terms, names, id_col=id_col, analyzer=analyzer
-    )
-    per_doc.persist()
-    stats = per_doc.agg(
-        F.count("*").alias("n"),
-        *[F.avg(f"dl_{j}").alias(f"avgdl_{j}") for j in range(len(names))],
-        *[
-            F.count(F.when(F.col(f"tf_{j}_{i}") > 0, 1)).alias(f"df_{j}_{i}")
-            for j in range(len(names))
-            for i in range(len(terms))
-        ],
-    ).first()
-    n_docs = float(stats["n"])
-    field_scores = []
-    for j, (_, w) in enumerate(specs):
-        avgdl = float(stats[f"avgdl_{j}"] or 0.0)
-        parts = []
-        for i in range(len(terms)):
-            dfi = float(stats[f"df_{j}_{i}"])
-            if dfi == 0 or avgdl == 0:
-                continue
-            tw = 1.0 if term_weights is None else float(term_weights[i])
-            tf = F.col(f"tf_{j}_{i}").cast("double")
-            idf = math.log(1.0 + (n_docs - dfi + 0.5) / (dfi + 0.5))
-            parts.append(
-                F.lit(w * tw * idf)
-                * (tf * (k1 + 1.0))
-                / (tf + F.lit(k1) * (1.0 - b + b * F.col(f"dl_{j}") / F.lit(avgdl)))
-            )
-        if parts:
-            total = parts[0]
-            for p in parts[1:]:
-                total = total + p
-            field_scores.append(total)
-    if not field_scores:
-        return per_doc, None
-    if combine == "best_fields":
-        combined = (
-            F.greatest(*field_scores) if len(field_scores) > 1 else field_scores[0]
-        )
-        if tie_breaker:
-            total = field_scores[0]
-            for s in field_scores[1:]:
-                total = total + s
-            combined = combined + F.lit(float(tie_breaker)) * (total - combined)
-    else:
-        combined = field_scores[0]
-        for s in field_scores[1:]:
-            combined = combined + s
-    if keep_zero_hits:
-        # input is already a filtered match set (query-string result):
-        # docs matching only non-scoring clauses stay at score 0
-        hits = per_doc
-    else:
-        any_hit = None
-        for j in range(len(names)):
-            for i in range(len(terms)):
-                c = F.col(f"tf_{j}_{i}") > 0
-                any_hit = c if any_hit is None else (any_hit | c)
-        hits = per_doc.filter(any_hit)
-    topk = (
-        hits.select(F.col(id_col), F.round(combined, round_to).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-    return per_doc, topk
+        return _collect(_top(scored, k, id_col))
 
 
 def build_inverted_index(
@@ -1519,63 +1460,19 @@ def function_score_topk(
     multiplied by it, and only the PRODUCT rounds to ``round_to`` —
     deterministic and oracle-comparable. Top-k is a TakeOrdered over
     the scored projection."""
-    import math
-
     terms = analyze_query(query, analyzer)
-    spark = docs.sparkSession
     if not terms:
         return docs.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
     pre = docs.withColumn("__factor", factor.cast("double"))
-    per_doc = bm25_per_doc(
-        pre, terms, id_col=id_col, text_col=text_col, analyzer=analyzer,
+    with _scoring_pass(
+        pre, terms, [text_col], id_col=id_col, analyzer=analyzer,
         extra_cols=["__factor"],
-    )
-    per_doc.persist()
-    try:
-        stats = per_doc.agg(
-            F.count("*").alias("n"),
-            F.avg("dl").alias("avgdl"),
-            *[
-                F.count(F.when(F.col(f"tf_{i}") > 0, 1)).alias(f"df_{i}")
-                for i in range(len(terms))
-            ],
-        ).first()
-        n_docs = float(stats["n"])
-        avgdl = float(stats["avgdl"] or 0.0)
-        parts = []
-        any_hit = None
-        for i in range(len(terms)):
-            dfi = float(stats[f"df_{i}"])
-            c = F.col(f"tf_{i}") > 0
-            any_hit = c if any_hit is None else (any_hit | c)
-            if dfi == 0:
-                continue
-            tf = F.col(f"tf_{i}").cast("double")
-            idf = math.log(1.0 + (n_docs - dfi + 0.5) / (dfi + 0.5))
-            contrib = F.lit(idf) * (tf * (k1 + 1.0)) / (
-                tf + F.lit(k1) * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-            )
-            parts.append(F.when(c, contrib).otherwise(F.lit(0.0)))
-        if not parts:
-            return docs.select(
-                F.col(id_col), F.lit(0.0).alias("score")
-            ).limit(0)
-        raw = parts[0]
-        for p in parts[1:]:
-            raw = raw + p
-        topk = (
-            per_doc.filter(any_hit)
-            .select(
-                F.col(id_col),
-                F.round(raw * F.col("__factor"), round_to).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k)
+    ) as (per_doc, stats):
+        scored = _hits(
+            per_doc, stats, len(terms), id_col=id_col, round_to=round_to,
+            factor=F.col("__factor"), k1=k1, b=b,
         )
-        rows, schema = topk.collect(), topk.schema
-    finally:
-        per_doc.unpersist()
-    return spark.createDataFrame(rows, schema)
+        return _collect(_top(scored, k, id_col))
 
 
 def boosting_topk(
@@ -1809,63 +1706,20 @@ def collapse_topk(
     per-doc projection; the winner window partitions by the collapse
     key (each key sorts only its own hits — no global sort), and the
     final page is a TakeOrdered over the winners."""
-    import math
-
     from pyspark.sql.window import Window
 
     terms = analyze_query(query, analyzer)
-    spark = docs.sparkSession
     if not terms:
         return docs.select(
             F.col(id_col), F.col(collapse_field), F.lit(0.0).alias("score")
         ).limit(0)
-    per_doc = bm25_per_doc(
-        docs, terms, id_col=id_col, text_col=text_col, analyzer=analyzer,
+    with _scoring_pass(
+        docs, terms, [text_col], id_col=id_col, analyzer=analyzer,
         extra_cols=[collapse_field],
-    )
-    per_doc.persist()
-    try:
-        stats = per_doc.agg(
-            F.count("*").alias("n"),
-            F.avg("dl").alias("avgdl"),
-            *[
-                F.count(F.when(F.col(f"tf_{i}") > 0, 1)).alias(f"df_{i}")
-                for i in range(len(terms))
-            ],
-        ).first()
-        n_docs = float(stats["n"])
-        avgdl = float(stats["avgdl"] or 0.0)
-        parts, any_hit = [], None
-        for i in range(len(terms)):
-            dfi = float(stats[f"df_{i}"])
-            c = F.col(f"tf_{i}") > 0
-            any_hit = c if any_hit is None else (any_hit | c)
-            if dfi == 0:
-                continue
-            tf = F.col(f"tf_{i}").cast("double")
-            idf = math.log(1.0 + (n_docs - dfi + 0.5) / (dfi + 0.5))
-            parts.append(
-                F.when(
-                    c,
-                    F.lit(idf) * (tf * (k1 + 1.0)) / (
-                        tf
-                        + F.lit(k1)
-                        * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-                    ),
-                ).otherwise(F.lit(0.0))
-            )
-        if not parts:
-            return docs.select(
-                F.col(id_col), F.col(collapse_field),
-                F.lit(0.0).alias("score"),
-            ).limit(0)
-        raw = parts[0]
-        for p in parts[1:]:
-            raw = raw + p
-        scored = per_doc.filter(any_hit).select(
-            F.col(id_col),
-            F.col(collapse_field),
-            F.round(raw, round_to).alias("score"),
+    ) as (per_doc, stats):
+        scored = _hits(
+            per_doc, stats, len(terms), id_col=id_col, round_to=round_to,
+            cols=[collapse_field], k1=k1, b=b,
         )
         w = Window.partitionBy(collapse_field).orderBy(
             F.desc("score"), F.asc(id_col)
@@ -1881,32 +1735,18 @@ def collapse_topk(
                 F.min(hit).alias("__w"),
                 F.array_sort(F.collect_list(hit)).alias("__h"),
             )
-            topk = (
-                grouped.select(
-                    F.col("__w.i").alias(id_col),
-                    collapse_field,
-                    F.col("__w.s").alias("score"),
-                    F.transform(F.col("__h"), lambda x: x["i"]).alias(
-                        "inner_ids"
-                    ),
-                    F.transform(F.col("__h"), lambda x: x["s"]).alias(
-                        "inner_scores"
-                    ),
-                )
-                .orderBy(F.desc("score"), F.asc(id_col))
-                .limit(k)
+            page = grouped.select(
+                F.col("__w.i").alias(id_col),
+                collapse_field,
+                F.col("__w.s").alias("score"),
+                F.transform(F.col("__h"), lambda x: x["i"]).alias("inner_ids"),
+                F.transform(F.col("__h"), lambda x: x["s"]).alias("inner_scores"),
             )
         else:
-            winners = ranked.filter(F.col("__r") == 1)
-            topk = (
-                winners.select(id_col, collapse_field, "score")
-                .orderBy(F.desc("score"), F.asc(id_col))
-                .limit(k)
+            page = ranked.filter(F.col("__r") == 1).select(
+                id_col, collapse_field, "score"
             )
-        rows, schema = topk.collect(), topk.schema
-    finally:
-        per_doc.unpersist()
-    return spark.createDataFrame(rows, schema)
+        return _collect(_top(page, k, id_col))
 
 
 def percolate_many(

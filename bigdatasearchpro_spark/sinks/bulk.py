@@ -125,10 +125,10 @@ def bulk_index_table(
 
     True last-write-wins needs a write-order column — pass it as
     ``order_by`` (ingest timestamp, sequence number). Without one the
-    winner is the greatest full payload (all non-id columns, compared in
-    column order): deterministic across runs and partitionings, but NOT
-    arrival order — a batch DataFrame has no inherent write order to
-    recover.
+    winner is the row with the greatest content fingerprint (xxhash64
+    over every column; one hash aggregate, however wide the row):
+    deterministic across runs and partitionings, but NOT arrival order
+    — a batch DataFrame has no inherent write order to recover.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -136,8 +136,7 @@ def bulk_index_table(
     from bigdatasearchpro_spark.operators.dedup import dedup_last_write_wins
 
     if id_col is not None:
-        order = order_by or [c for c in df.columns if c != id_col] or [id_col]
-        df = dedup_last_write_wins(df, id_col, order, keep="last")
+        df = dedup_last_write_wins(df, id_col, order_by or [], keep="last")
     # rows written = this batch, observed during the write itself — a
     # table re-count would re-scan the sink and, under mode='append',
     # inflate the result with pre-existing rows.

@@ -164,17 +164,17 @@ def foreach_batch_bulk_sink(
     """Micro-batch bulk load — the direct analogue of the reference's
     cursor->BulkProcessor loop (``BulkProcessImpl.java:120-130``): each
     micro-batch is appended via the same batched writer used for bulk
-    ETL, with optional per-batch last-write-wins dedup on ``id_col``.
+    ETL, with optional per-batch keep-one dedup on ``id_col``: a batch
+    carries no write-order column, so the winner is the row with the
+    greatest content fingerprint (see ``bulk_index_table``) —
+    deterministic across runs and partitionings, but NOT arrival order.
     """
     from bigdatasearchpro_spark.operators.dedup import dedup_last_write_wins
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         df = batch_df
         if id_col is not None:
-            # deterministic greatest-payload winner within the batch;
-            # pass a write-order column for true LWW (see bulk_index_table)
-            order = [c for c in df.columns if c != id_col] or [id_col]
-            df = dedup_last_write_wins(df, id_col, order, keep="last")
+            df = dedup_last_write_wins(df, id_col, [], keep="last")
         df.write.mode("append").parquet(out_dir)
 
     return (

@@ -523,6 +523,32 @@ def test_update_by_query_unknown_column(spark, sf_dir):
         api.delete_index(spark, idx)
 
 
+def test_count_follows_field_mapping(spark):
+    """_count?q= filters exactly as the search does: a field mapped to
+    the english analyzer matches inflected forms in both."""
+    idx = "count_mapping_idx"
+    api.bulk_data_to_index(
+        spark,
+        spark.createDataFrame(
+            [(1, "walks home"), (2, "she runs"), (3, "run late"),
+             (4, "unrelated words")],
+            "doc_id long, text string",
+        ),
+        idx,
+        id_col="doc_id",
+    )
+    try:
+        api.put_mapping(spark, idx, {"text": "english"})
+        hits = api.query_data(spark, "text:runs", idx, highlight=False).collect()
+        assert sorted(r["doc_id"] for r in hits) == ["2", "3"]
+        assert api.get_index_data_count(spark, idx, "text:runs") == len(hits)
+        # unqualified query over every string field, mixed-case name
+        all_hits = api.query_data(spark, "runs", idx, highlight=False).collect()
+        assert api.get_index_data_count(spark, idx.upper(), "runs") == len(all_hits)
+    finally:
+        api.delete_index(spark, idx)
+
+
 def test_put_mapping_validation_and_search(spark, sf_dir):
     """ES _mapping parity: per-field analyzers persist, validate, and
     drive the search path symmetrically."""

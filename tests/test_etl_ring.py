@@ -54,6 +54,38 @@ def test_dedup_last_write_wins(spark):
     assert got == {"a": "new", "b": "only"}
 
 
+def test_keyed_load_without_order_by_is_one_join(spark):
+    """A keyed load with no write-order column picks each id's winner
+    by content fingerprint alone: one hash aggregate + the winner
+    semi-join, however wide the row (substituting every column as the
+    order vector doubled the plan per column: 256 joins at 8)."""
+    from bigdatasearchpro_spark.sinks.bulk import bulk_index_table
+
+    rows = [
+        (str(i % 50), *[f"v{(i * (j + 3)) % 7}" for j in range(7)])
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(
+        rows, "id string, " + ", ".join(f"c{j} string" for j in range(7))
+    )
+    plan = (
+        dedup.dedup_last_write_wins(df, "id", [], keep="last")
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert sum(
+        1 for line in plan.splitlines()
+        if line.lstrip(" :+-").startswith("Join ")
+    ) == 1, plan
+    name = "keyed_no_order_idx"
+    bulk_index_table(df, name, id_col="id")
+    try:
+        got = spark.table(name).collect()
+        assert sorted(r["id"] for r in got) == sorted({r[0] for r in rows})
+        assert {tuple(r) for r in got} <= set(rows)  # each a real input row
+    finally:
+        delete_index(spark, name)
+
+
 def test_dedup_exact_by_hash_unique_and_deterministic(spark, docs):
     doubled = docs.unionByName(docs.withColumn("doc_id", F.col("doc_id") + 10**6))
     out = dedup.dedup_exact_by_hash(doubled, "text", "doc_id")

@@ -163,36 +163,55 @@ def test_exchange_free_plans_are_codegened(spark, sf_dir):
     assert wholestage_codegen_count(QUERIES["p4_filter_predicates"](spark, sf_dir)) >= 1
 
 
-def test_bm25_flagship_single_corpus_scan(spark, sf_dir):
+def _collected_plans(monkeypatch, run) -> list:
+    """Run a scored search and return, for every <= k-row result it
+    collects, ``(executed plan, cache reads)`` — read inside the
+    scoring pass, while the per-doc projection is still cached."""
+    from bigdatasearchpro_spark.operators import search
+    from bigdatasearchpro_spark.plans import executed_plan, in_memory_scan_count
+
+    seen = []
+    real = search._collect
+
+    def spy(df):
+        seen.append((executed_plan(df), in_memory_scan_count(df)))
+        return real(df)
+
+    monkeypatch.setattr(search, "_collect", spy)
+    run()
+    return seen
+
+
+def _assert_top_k_reads_cache_only(seen) -> None:
+    """The scoring/top-k job: a TakeOrdered that reads the cache, not
+    the corpus (the only FileScan text allowed is INSIDE the
+    InMemoryRelation's cached-plan description)."""
+    assert seen
+    for plan, cache_reads in seen:
+        assert "TakeOrderedAndProject" in plan
+        assert cache_reads >= 1
+        above_cache = plan.split("InMemoryRelation")[0]
+        assert "FileScan" not in above_cache and "BatchScan" not in above_cache
+
+
+def test_bm25_flagship_single_corpus_scan(spark, sf_dir, monkeypatch):
     """VERDICT r1 'what's wrong' #1: the direct BM25 path must read the
     corpus text ONCE — the per-doc (dl, tf_i) integer projection scans
     the parquet once, and both the stats aggregate and the top-k read
     the cached projection, never the file again."""
     from bigdatasearchpro_spark.operators import search
-    from bigdatasearchpro_spark.plans import file_scan_count, in_memory_scan_count
+    from bigdatasearchpro_spark.plans import file_scan_count
 
     docs = load_table(spark, sf_dir, "documents")
-    terms = search.analyze_query("spark join window")
-    # the projection itself: one file scan (must inspect BEFORE the
-    # pipeline persists it — afterwards the cache manager rewrites any
-    # identical plan to read the InMemoryRelation)
-    assert file_scan_count(search.bm25_per_doc(docs, terms)) == 1
-    per_doc, topk = search._topk_pipeline(
-        docs, terms, 10, id_col="doc_id", text_col="text",
-        scoring="bm25", k1=1.2, b=0.75, round_to=4,
-    )
-    try:
-        # the scoring/top-k job: reads the cache, not the corpus (the
-        # only FileScan text allowed is INSIDE the InMemoryRelation's
-        # cached-plan description)
-        from bigdatasearchpro_spark.plans import executed_plan
-
-        plan = executed_plan(topk)
-        above_cache = plan.split("InMemoryRelation")[0]
-        assert in_memory_scan_count(topk) >= 1
-        assert "FileScan" not in above_cache and "BatchScan" not in above_cache
-    finally:
-        per_doc.unpersist()
+    q = "spark join window"
+    # the projection itself: one file scan (inspected while nothing is
+    # cached — during the pass the cache manager rewrites any identical
+    # plan to read the InMemoryRelation)
+    terms = search.analyze_query(q)
+    assert file_scan_count(search._per_doc(docs, terms, ["text"], id_col="doc_id")) == 1
+    _assert_top_k_reads_cache_only(_collected_plans(
+        monkeypatch, lambda: search.search_topk(docs, q, 10)
+    ))
 
 
 def test_query_string_proximity_is_single_narrow_filter(spark, sf_dir):
@@ -209,67 +228,81 @@ def test_query_string_proximity_is_single_narrow_filter(spark, sf_dir):
     assert file_scan_count(out) == 1
 
 
-def test_boosted_topk_single_corpus_scan(spark, sf_dir):
+def test_boosted_topk_single_corpus_scan(spark, sf_dir, monkeypatch):
     """Boost weights fold into scoring literals: the plan must stay the
     single-scan shape of the unboosted flagship (cached int projection
     + TakeOrdered)."""
-    from bigdatasearchpro_spark.operators.search import _topk_pipeline
-    from bigdatasearchpro_spark.plans import (
-        has_take_ordered,
-        in_memory_scan_count,
-    )
+    from bigdatasearchpro_spark.operators import search
 
     docs = load_table(spark, sf_dir, "documents")
-    per_doc, topk = _topk_pipeline(
-        docs, ["spark", "join", "window"], 10,
-        id_col="doc_id", text_col="text", scoring="bm25",
-        k1=1.2, b=0.75, round_to=4, term_weights=[1.0, 2.0, 3.0],
-    )
-    try:
-        assert has_take_ordered(topk)
-        assert in_memory_scan_count(topk) >= 1  # reads the cached projection
-        # corpus text scanned ONCE, at cache fill: no file scan above
-        # the InMemoryRelation (the cached subtree retains its own)
-        from bigdatasearchpro_spark.plans import executed_plan
-
-        above_cache = executed_plan(topk).split("InMemoryRelation")[0]
-        assert "FileScan" not in above_cache and "BatchScan" not in above_cache
-    finally:
-        per_doc.unpersist()
+    _assert_top_k_reads_cache_only(_collected_plans(
+        monkeypatch,
+        lambda: search.search_topk(
+            docs, "spark join window", 10, term_weights=[1.0, 2.0, 3.0]
+        ),
+    ))
 
 
-def test_multifield_boosted_single_corpus_scan(spark, sf_dir):
+def test_multifield_boosted_single_corpus_scan(spark, sf_dir, monkeypatch):
     """Per-field boosts must not multiply corpus scans: the multi-field
     per-doc projection (dl_j, tf_{j,i} for every field) reads the
     parquet ONCE, and the stats aggregate + top-k read the cached
     projection, never the file again (mirrors the flagship gate)."""
     from bigdatasearchpro_spark.operators import search
-    from bigdatasearchpro_spark.plans import (
-        executed_plan,
-        file_scan_count,
-        has_take_ordered,
-        in_memory_scan_count,
-    )
+    from bigdatasearchpro_spark.plans import file_scan_count
 
     docs = load_table(spark, sf_dir, "documents")
-    terms = search.analyze_query("spark en src1")
-    specs = search.parse_boosted_fields(["text^3", "lang", "source^2"])
+    q, fields = "spark en src1", ["text^3", "lang", "source^2"]
+    groups = [[n] for n, _ in search.parse_boosted_fields(fields)]
     assert file_scan_count(
-        search.multifield_per_doc(docs, terms, [n for n, _ in specs],
-                                  id_col="doc_id")
+        search._per_doc(docs, search.analyze_query(q), groups, id_col="doc_id")
     ) == 1
-    per_doc, topk = search._multifield_pipeline(
-        docs, terms, specs, 10, id_col="doc_id", combine="best_fields",
-        k1=1.2, b=0.75, round_to=4, keep_zero_hits=False, term_weights=None,
-    )
-    try:
-        assert topk is not None
-        assert has_take_ordered(topk)
-        assert in_memory_scan_count(topk) >= 1
-        above_cache = executed_plan(topk).split("InMemoryRelation")[0]
-        assert "FileScan" not in above_cache and "BatchScan" not in above_cache
-    finally:
-        per_doc.unpersist()
+    _assert_top_k_reads_cache_only(_collected_plans(
+        monkeypatch, lambda: search.search_topk_multifield(docs, q, fields, 10)
+    ))
+
+
+def test_function_score_single_corpus_scan(spark, sf_dir, monkeypatch):
+    """function_score (and boosting, which composes it): the factor
+    rides the cached projection, so the corpus is scanned once and the
+    top-k reads the cache (the flagship gate)."""
+    from bigdatasearchpro_spark.operators import search
+    from bigdatasearchpro_spark.plans import file_scan_count
+
+    docs = load_table(spark, sf_dir, "documents")
+    q = "spark join window"
+    pre = docs.withColumn("__factor", F.log1p(F.col("doc_id")))
+    assert file_scan_count(search._per_doc(
+        pre, search.analyze_query(q), ["text"], id_col="doc_id",
+        extra_cols=["__factor"],
+    )) == 1
+    _assert_top_k_reads_cache_only(_collected_plans(
+        monkeypatch,
+        lambda: search.function_score_topk(docs, q, F.log1p(F.col("doc_id")), 10),
+    ))
+    _assert_top_k_reads_cache_only(_collected_plans(
+        monkeypatch, lambda: search.boosting_topk(docs, q, "window", 10)
+    ))
+
+
+def test_collapse_single_corpus_scan(spark, sf_dir, monkeypatch):
+    """collapse: the collapse key rides the cached projection; the
+    per-key window and the winners' TakeOrdered read the cache, never
+    the corpus (the flagship gate), with and without inner_hits."""
+    from bigdatasearchpro_spark.operators import search
+    from bigdatasearchpro_spark.plans import file_scan_count
+
+    docs = load_table(spark, sf_dir, "documents")
+    q = "spark join window"
+    assert file_scan_count(search._per_doc(
+        docs, search.analyze_query(q), ["text"], id_col="doc_id",
+        extra_cols=["source"],
+    )) == 1
+    for inner in (0, 2):
+        _assert_top_k_reads_cache_only(_collected_plans(
+            monkeypatch,
+            lambda: search.collapse_topk(docs, q, "source", 10, inner_hits=inner),
+        ))
 
 
 def test_composite_after_key_pushes_to_scan(spark, sf_dir):

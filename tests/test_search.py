@@ -201,6 +201,43 @@ def test_query_data_per_field_boosts(spark, docs):
         api.delete_index(spark, idx)
 
 
+def test_scored_searches_agree_on_one_field(spark, docs):
+    """Every scored search is one scorer: on one query and one field,
+    search_topk, single-field multifield, function_score with factor
+    1.0, collapse winners and the summed _explain contributions give
+    the same 4-dp score for a document."""
+    from bigdatasearchpro_spark import api
+
+    idx = "scorer_agree_idx"
+    api.bulk_data_to_index(
+        spark, docs.select("doc_id", "text", "source"), idx, id_col="doc_id"
+    )
+    try:
+        table = spark.table(idx)
+        top = {
+            r["doc_id"]: r["score"]
+            for r in search.search_topk(table, QUERY, 10).collect()
+        }
+        assert len(top) == 10
+        for other in (
+            search.search_topk_multifield(table, QUERY, ["text"], 10),
+            search.function_score_topk(table, QUERY, F.lit(1.0), 10),
+        ):
+            assert {r["doc_id"]: r["score"] for r in other.collect()} == top
+        every = {
+            r["doc_id"]: r["score"]
+            for r in search.search_topk(table, QUERY, 10**6).collect()
+        }
+        winners = search.collapse_topk(table, QUERY, "source", 10).collect()
+        assert winners and all(every[r["doc_id"]] == r["score"] for r in winners)
+        for doc_id in list(top)[:3]:
+            exp = api.explain_doc(spark, QUERY, idx, doc_id)
+            total = sum(d["value"] for d in exp["details"])
+            assert round(total, 4) == top[doc_id]
+    finally:
+        api.delete_index(spark, idx)
+
+
 # ---------------------------------------------------------------------------
 # Configurable analyzers (operators/analyzers.py)
 # ---------------------------------------------------------------------------
