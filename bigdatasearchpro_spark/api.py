@@ -299,9 +299,9 @@ def query_data(
             )
             .orderBy(*leads, F.asc(id_col))
             .limit(from_ + k)
+            .offset(from_)
         )
-        rows = page.collect()[from_:]
-        return spark.createDataFrame(rows, page.schema) if rows else page.limit(0)
+        return search._collect(page)
     weighted = weighted_terms(parse_query_string(query), analyzer=analyzer)
     if not weighted:
         # pure-filter query (e.g. only ranges/wildcards): constant score,
@@ -310,9 +310,9 @@ def query_data(
             matched.select(F.col(id_col), F.lit(0.0).alias("score"))
             .orderBy(id_col)
             .limit(from_ + k)
+            .offset(from_)
         )
-        rows = page.collect()[from_:]
-        return spark.createDataFrame(rows, page.schema) if rows else page.limit(0)
+        return search._collect(page)
     # keep_zero_hits: `matched` is already the query's filtered match
     # set — a doc matching only non-scoring clauses (wildcard/range)
     # must stay in the page at score 0 (ES returns it constant-scored),
@@ -351,6 +351,25 @@ def _match(
     analyzer)."""
     from bigdatasearchpro_spark.operators.querystring import query_string_filter
 
+    docs, specs, fields, mapping, analyzer = _resolve(
+        spark, index_name, text_col, routing
+    )
+    matched = query_string_filter(
+        docs, query, default_field=fields, fields=fields,
+        analyzer=analyzer, field_analyzers=mapping,
+    )
+    return matched, specs, analyzer
+
+
+def _resolve(
+    spark: SparkSession,
+    index_name: str,
+    text_col: "str | list[str] | None",
+    routing: "str | None" = None,
+) -> "tuple[DataFrame, list[str], list[str], dict, str]":
+    """What a query on ONE index searches, before any filter: ``(docs,
+    field specs, field names, mapping, scoring analyzer)`` — the
+    resolution half of :func:`_match`, shared with :func:`explain_doc`."""
     docs = resolve_index(spark, index_name)
     if routing is not None:
         docs = apply_routing(spark, index_name, docs, routing)
@@ -366,11 +385,7 @@ def _match(
     analyzer = (
         mapping.get(fields[0], "standard") if len(fields) == 1 else "standard"
     )
-    matched = query_string_filter(
-        docs, query, default_field=fields, fields=fields,
-        analyzer=analyzer, field_analyzers=mapping,
-    )
-    return matched, specs, analyzer
+    return docs, specs, fields, mapping, analyzer
 
 
 def get_field_mapping(spark: SparkSession, index_name: str) -> dict:
@@ -694,18 +709,16 @@ def scroll(
         docs = docs.filter(F.col(id_col) > F.lit(scroll_id))
     # probe one row past the page: if the boundary falls inside a run
     # of equal ids, the keyset cursor would skip the siblings — refuse
-    probe = docs.orderBy(F.asc(id_col)).limit(size + 1)
-    rows = probe.collect()
+    probe = search._collect(docs.orderBy(F.asc(id_col)).limit(size + 1))
+    rows = probe.collect()  # a local relation: no job
     if len(rows) == size + 1 and rows[size][id_col] == rows[size - 1][id_col]:
         raise ValueError(
             f"scroll requires unique {id_col!r} values: id "
             f"{rows[size][id_col]!r} straddles a page boundary and its "
             f"siblings would be skipped (dedup the index or raise size)"
         )
-    rows = rows[:size]
-    out = spark.createDataFrame(rows, probe.schema) if rows else probe.limit(0)
-    next_id = rows[-1][id_col] if len(rows) == size else None
-    return out, next_id
+    next_id = rows[size - 1][id_col] if len(rows) >= size else None
+    return probe.limit(size), next_id
 
 
 def reindex(
@@ -1741,13 +1754,21 @@ def explain_doc(
     Thin ES-response adapter over :func:`operators.search.explain_score`
     (the single home of the breakdown math, oracle-verified by the
     ``l3_explain_score`` registry entry). Returns the ES-shaped
-    ``{"matched": bool, "value": score, "details": [...]}``."""
-    docs = spark.table(transform.normalize_index_name(index_name))
-    if not search.analyze_query(query):
+    ``{"matched": bool, "value": score, "details": [...]}``.
+
+    The index and the field resolve as they do for :func:`query_data`
+    (:func:`_resolve`): remote ``alias:index`` names, and the field's
+    mapped analyzer for the query terms and the corpus alike. The
+    statistics are the whole index's — ``search_topk``'s score over
+    the index, which is :func:`query_data`'s (matched-set statistics)
+    only when the query matches every document."""
+    docs, _, fields, _, analyzer = _resolve(spark, index_name, text_col)
+    if not search.analyze_query(query, analyzer):
         return {"matched": False, "value": 0.0, "details": []}
     rows = search.explain_score(
-        docs, query, doc_id, id_col=id_col, text_col=text_col,
-        k1=k1, b=b, round_to=6, keep_nonmatching=True,
+        docs, query, doc_id, id_col=id_col,
+        text_col=fields[0] if len(fields) == 1 else fields,
+        k1=k1, b=b, round_to=6, keep_nonmatching=True, analyzer=analyzer,
     ).collect()
     if not rows:
         raise ValueError(f"doc {doc_id!r} not found in {index_name!r}")

@@ -19,6 +19,10 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# prefix of the ids NULL keys get (ES auto ids): see dedup_last_write_wins
+AUTO_ID = "_auto-"
 
 
 def _shj(df: DataFrame) -> DataFrame:
@@ -79,10 +83,23 @@ def dedup_last_write_wins(
     partitionings, but NOT arrival order (the keyed bulk load's
     no-write-order fallback).
 
+    NULL keys (string key columns) get ES auto ids: ES indexes every
+    NULL-id document under a generated id, so none of them collapses
+    with another. Each NULL-key row is keyed ``_auto-<fingerprint as 16
+    hex digits>`` for the reduction — its own group, since a NULL never
+    equi-joins — and leaves as ``_auto-<hex>-<i>``, ``i`` = 1..n over
+    the n bit-identical copies of the row. The ids are distinct from
+    each other, the same when the same input is loaded again, and
+    apart from real ids as long as no real id uses the ``_auto-``
+    prefix. A non-string key column cannot hold such an id: its NULL
+    keys join nothing and their rows are dropped, so stringify the key
+    first (``api.bulk_data_to_index`` stringifies every column).
+
     Identical duplicate rows (bit-equal content ⇒ equal fingerprint)
     all match the winning ``(key, fingerprint)``, so a final
-    ``dropDuplicates([key, fingerprint])`` collapses them to the single
-    row the contract requires — keyed by the SEMI-JOIN's own join keys,
+    aggregation on ``(key, fingerprint)`` collapses them to the single
+    row the contract requires (counting them, for the auto-id copies)
+    — keyed by the SEMI-JOIN's own join keys,
     so the aggregation reuses the join's hash partitioning and adds NO
     Exchange (a full-row ``distinct()`` here re-shuffled the wide rows
     a second time: 8.5 s vs 2.9 s measured at sf0.1). Because the
@@ -104,6 +121,12 @@ def dedup_last_write_wins(
     fp = F.xxhash64(
         *[x for c in df.columns for x in (F.col(c).isNull(), F.col(c))]
     )
+    # The input is scanned more than once (the candidates, each
+    # reduction step, the final semi-join), with or without
+    # ``materialize``: the result is deterministic only for an input
+    # that reads the same on every scan. A source that can change
+    # between scans (a table written concurrently, a nondeterministic
+    # upstream) must be persisted or checkpointed by the caller first.
     # ``materialize`` (r13, reverting the r12 default): the r12 round
     # persisted the narrow candidates + checkpointed the winner table
     # unconditionally, on an A/B that measured the ETL chain 8.5->5.4 s
@@ -118,8 +141,16 @@ def dedup_last_write_wins(
     # every column, so nothing prunes) (order_by)+2 times, so a corpus
     # on cold object storage with cheap local cache disk should pass
     # materialize=True; a fast-scan/slow-disk installation should not.
+    auto = isinstance(df.schema[key].dataType, T.StringType)
+
+    def auto_id(fp_col):
+        return F.format_string(AUTO_ID + "%016x", fp_col)
+
+    def keyed(fp_col):
+        return F.coalesce(F.col(key), auto_id(fp_col)) if auto else F.col(key)
+
     cand = df.select(
-        F.col(key), fp.alias("__fp"), *[F.col(c) for c in order_by]
+        keyed(fp).alias(key), fp.alias("__fp"), *[F.col(c) for c in order_by]
     )
     if materialize:
         cand = cand.persist()
@@ -135,12 +166,31 @@ def dedup_last_write_wins(
     if materialize:
         winners = winners.localCheckpoint(eager=True)
         cand.unpersist()
-    return (
+    kept = (
         df.withColumn("__fp", fp)
+        .withColumn(key, keyed(F.col("__fp")))
         .join(_shj(winners), [key, "__fp"], "left_semi")
-        .dropDuplicates([key, "__fp"])
-        .drop("__fp")
     )
+    others = [c for c in df.columns if c != key]
+    grouped = kept.groupBy(key, "__fp").agg(
+        *[F.first(c).alias(c) for c in others], F.count(F.lit(1)).alias("__n")
+    )
+    if not auto:
+        return grouped.select(*df.columns)
+    # an auto-keyed group expands back to its n copies, numbered 1..n
+    # (0 marks a real key)
+    copy = F.explode(
+        F.when(
+            F.col(key) == auto_id(F.col("__fp")),
+            F.sequence(F.lit(1), F.col("__n")),
+        ).otherwise(F.array(F.lit(0)))
+    ).alias("__i")
+    out_key = F.when(
+        F.col("__i") > 0, F.concat_ws("-", key, "__i")
+    ).otherwise(F.col(key))
+    return grouped.select("*", copy).select(*[
+        out_key.alias(key) if c == key else F.col(c) for c in df.columns
+    ])
 
 
 def dedup_exact_by_hash(df: DataFrame, content_col: str, id_col: str) -> DataFrame:

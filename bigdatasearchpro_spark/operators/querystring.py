@@ -30,6 +30,7 @@ codegen during the scan.
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass
 from typing import Optional, Sequence
@@ -365,6 +366,7 @@ def compile_predicate(
             return field_analyzers.get(field, analyzer)
         return analyzer
 
+    @functools.cache  # one token expression per field per compile
     def toks(field: Optional[str]) -> Column:
         if field is None:
             return tokens_expr(list(default_cols), analyzer)

@@ -25,6 +25,11 @@ Scale design (100 TB corpus):
   identically and the corpus text is scanned exactly once per query.
   The stats aggregate is the one place a per-index stats cache would
   go.
+- A scored query's fixed cost is its Spark jobs: the stats aggregate
+  and ONE top-k job. The <= k-row page (with ``search_paged``'s rank,
+  computed in that same job) stays in the JVM and comes back as a
+  local relation (``_collect``), so consuming it runs no further job
+  and starts no Python worker.
 - Expensive per-term predicates (fuzzy/regex) aggregate to the DISTINCT
   vocabulary first (|vocab| << token occurrences), match the vocabulary,
   then broadcast-semi-join doc ids back.
@@ -229,9 +234,23 @@ def _scoring_pass(
 
 
 def _collect(df: DataFrame) -> DataFrame:
-    """Materialize a small result while its :func:`_scoring_pass` cache
-    is still held."""
-    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+    """Materialize a small result (a top-k, sort or scroll page) as a
+    local relation; inside a :func:`_scoring_pass` block, call it while
+    the block's cache is still held.
+
+    The rows stay in the JVM: they are collected to the driver there
+    and wrapped as a ``LocalRelation``, so no Python worker starts and
+    the returned frame plans as a ``LocalTableScan``. Collecting it, or
+    a projection, filter or limit of it, runs no Spark job. A round
+    trip through Python (``createDataFrame(df.collect(), schema)``)
+    would pickle the rows out and back into a Python RDD, and the
+    consumer's collect would run a Python-worker job.
+    """
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    spark, jdf = df.sparkSession, df._jdf
+    local = spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema())
+    return ClassicDataFrame(local, spark)
 
 
 def _term_parts(stats, j: int, i: int, *, scoring: str, k1: float, b: float):
@@ -341,10 +360,56 @@ def _hits(
     return per_doc.select(*out, F.round(score, round_to).alias("score"))
 
 
-def _top(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+def _top(
+    scored: DataFrame, k: int, id_col: str, rank_from: "int | None" = None
+) -> DataFrame:
     """The top-k page: (score desc, id asc) — a TakeOrdered, never a
-    global sort."""
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    global sort. ``rank_from`` adds the 1-based ``rank`` and keeps the
+    hits ranked after it (an ES ``from``): the rank is a ``row_number``
+    over the TakeOrdered's output, which is one ordered partition, so
+    it needs no exchange or sort and runs in the top-k job itself."""
+    order = [F.desc("score"), F.asc(id_col)]
+    page = scored.orderBy(*order).limit(k)
+    if rank_from is None:
+        return page
+    from pyspark.sql.window import Window
+
+    rank = F.row_number().over(Window.orderBy(*order))
+    return page.withColumn("rank", rank).filter(F.col("rank") > rank_from)
+
+
+def _ranked_page(
+    docs: DataFrame,
+    terms: Sequence[str],
+    groups: Sequence,
+    k: int,
+    *,
+    id_col: str,
+    analyzer: str = "standard",
+    extra_cols: Sequence[str] = (),
+    after: "tuple[float, object] | None" = None,
+    rank_from: "int | None" = None,
+    **hits_kw,
+) -> DataFrame:
+    """One scored top-k, materialized: one :func:`_scoring_pass`, the
+    :func:`_hits` past the ``after`` keyset cursor, and the
+    :func:`_top` page (ranked when ``rank_from`` is given) collected by
+    :func:`_collect` before the cache is released."""
+    with _scoring_pass(
+        docs, terms, groups, id_col=id_col, analyzer=analyzer,
+        extra_cols=extra_cols,
+    ) as (per_doc, stats):
+        scored = _hits(per_doc, stats, len(terms), id_col=id_col, **hits_kw)
+        if after is not None:
+            s, i = after
+            # keyset on the (score desc, id asc) total order: strictly
+            # after the cursor. Map-side filter — the heap stays k-sized
+            # at any page depth (the ES search_after rationale).
+            scored = scored.filter(
+                (F.col("score") < F.lit(float(s)))
+                | ((F.col("score") == F.lit(float(s))) & (F.col(id_col) > F.lit(i)))
+            )
+        return _collect(_top(scored, k, id_col, rank_from))
 
 
 def search_topk(
@@ -394,24 +459,11 @@ def search_topk(
         return docs.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
     if scoring not in ("tfidf", "bm25"):
         raise ValueError(f"unknown scoring: {scoring}")
-    with _scoring_pass(
-        docs, terms, [text_col], id_col=id_col, analyzer=analyzer
-    ) as (per_doc, stats):
-        scored = _hits(
-            per_doc, stats, len(terms), id_col=id_col, round_to=round_to,
-            keep_zero_hits=keep_zero_hits, scoring=scoring, k1=k1, b=b,
-            term_weights=term_weights,
-        )
-        if after is not None:
-            s, i = after
-            # keyset on the (score desc, id asc) total order: strictly
-            # after the cursor. Map-side filter — the heap stays k-sized
-            # at any page depth (the ES search_after rationale).
-            scored = scored.filter(
-                (F.col("score") < F.lit(float(s)))
-                | ((F.col("score") == F.lit(float(s))) & (F.col(id_col) > F.lit(i)))
-            )
-        return _collect(_top(scored, k, id_col))
+    return _ranked_page(
+        docs, terms, [text_col], k, id_col=id_col, analyzer=analyzer,
+        after=after, round_to=round_to, keep_zero_hits=keep_zero_hits,
+        scoring=scoring, k1=k1, b=b, term_weights=term_weights,
+    )
 
 
 def explain_score(
@@ -589,46 +641,47 @@ def search_paged(
 
     A ``text_col`` list may carry per-field boosts (``["title^3",
     "text"]``, :func:`parse_boosted_fields`): then the ranking is
-    :func:`search_topk_multifield` (each field its own BM25 corpus,
-    combined best-fields), otherwise :func:`search_topk` over the
+    :func:`search_topk_multifield`'s (each field its own BM25 corpus,
+    combined best-fields), otherwise :func:`search_topk`'s over the
     ``_all`` concatenation. Either runs with ``k = from_ + size`` (top-k
-    never global-sorts), so the page cost is the search cost plus a
-    broadcast join of <= from_+size ids back to the corpus for the
-    highlight source text.
+    never global-sorts), and the ``rank`` is computed inside that top-k
+    job (:func:`_top`), so an unhighlighted page costs the search's
+    jobs and no more: the page comes back as a local relation
+    (:func:`_collect`) whose collect runs no job. A highlighted page
+    adds a broadcast join of <= from_+size ids back to the corpus for
+    the highlight source text.
     """
     if from_ < 0 or size <= 0:
         raise ValueError("from_ must be >= 0 and size > 0")
+    if scoring not in ("tfidf", "bm25"):
+        raise ValueError(f"unknown scoring: {scoring}")
     specs = (
         None if isinstance(text_col, (str, Column))
         else parse_boosted_fields(text_col)
     )
     if specs is not None:
-        fields, text_col = text_col, [n for n, _ in specs]
+        text_col = [n for n, _ in specs]
     if specs and any(w != 1.0 for _, w in specs):
         if scoring != "bm25":
             raise ValueError("per-field boosts score with bm25 only")
-        top = search_topk_multifield(
-            docs, query, fields, from_ + size, id_col=id_col,
-            keep_zero_hits=keep_zero_hits, term_weights=term_weights,
-            analyzer=analyzer,
-        )
+        # search_topk_multifield's ranking: each field its own corpus
+        groups = [[n] for n in text_col]
+        how = dict(boosts=[w for _, w in specs], combine="best_fields")
     else:
-        top = search_topk(
-            docs, query, from_ + size, id_col=id_col, text_col=text_col,
-            scoring=scoring, term_weights=term_weights,
-            keep_zero_hits=keep_zero_hits, analyzer=analyzer,
+        groups, how = [text_col], dict(scoring=scoring)
+    terms = analyze_query(query, analyzer)
+    if not terms:
+        ranked = docs.select(
+            F.col(id_col), F.lit(0.0).alias("score"), F.lit(0).alias("rank")
+        ).limit(0)
+    else:
+        ranked = _ranked_page(
+            docs, terms, groups, from_ + size, id_col=id_col,
+            analyzer=analyzer, rank_from=from_, round_to=4,
+            keep_zero_hits=keep_zero_hits, term_weights=term_weights, **how,
         )
-    from pyspark.sql.window import Window
-
-    # top is <= from_+size materialized rows: the single-partition
-    # window is over the page, never the corpus.
-    ranked = top.withColumn(
-        "rank",
-        F.row_number().over(Window.orderBy(F.desc("score"), F.asc(id_col))),
-    ).filter(F.col("rank") > from_)
     if not highlight:
         return ranked
-    terms = analyze_query(query, analyzer)
     src = _text_expr(text_col).alias("__src")
     from bigdatasearchpro_spark.operators.analyzers import highlight_alternates
 
@@ -721,16 +774,12 @@ def search_topk_multifield(
     # each field as a 1-element list: the _text_expr list path wraps the
     # column in coalesce(, ''), so a NULL field scores 0 instead of
     # poisoning dl/tf with NULLs
-    with _scoring_pass(
-        docs, terms, [[n] for n, _ in specs], id_col=id_col, analyzer=analyzer
-    ) as (per_doc, stats):
-        scored = _hits(
-            per_doc, stats, len(terms), id_col=id_col, round_to=round_to,
-            keep_zero_hits=keep_zero_hits, boosts=[w for _, w in specs],
-            k1=k1, b=b, term_weights=term_weights, combine=combine,
-            tie_breaker=tie_breaker,
-        )
-        return _collect(_top(scored, k, id_col))
+    return _ranked_page(
+        docs, terms, [[n] for n, _ in specs], k, id_col=id_col,
+        analyzer=analyzer, round_to=round_to, keep_zero_hits=keep_zero_hits,
+        boosts=[w for _, w in specs], k1=k1, b=b, term_weights=term_weights,
+        combine=combine, tie_breaker=tie_breaker,
+    )
 
 
 def build_inverted_index(
@@ -1464,15 +1513,11 @@ def function_score_topk(
     if not terms:
         return docs.select(F.col(id_col), F.lit(0.0).alias("score")).limit(0)
     pre = docs.withColumn("__factor", factor.cast("double"))
-    with _scoring_pass(
-        pre, terms, [text_col], id_col=id_col, analyzer=analyzer,
-        extra_cols=["__factor"],
-    ) as (per_doc, stats):
-        scored = _hits(
-            per_doc, stats, len(terms), id_col=id_col, round_to=round_to,
-            factor=F.col("__factor"), k1=k1, b=b,
-        )
-        return _collect(_top(scored, k, id_col))
+    return _ranked_page(
+        pre, terms, [text_col], k, id_col=id_col, analyzer=analyzer,
+        extra_cols=["__factor"], round_to=round_to,
+        factor=F.col("__factor"), k1=k1, b=b,
+    )
 
 
 def boosting_topk(

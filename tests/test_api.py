@@ -187,6 +187,98 @@ def test_query_data_wildcard_only_matches_stay_in_page(spark, sf_dir, docs):
         api.delete_index(spark, idx)
 
 
+def _jobs_in(spark, group: str, run):
+    """``run()``'s result and the number of Spark jobs it started, read
+    from its own job group once the listener bus has caught up."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_query_page_is_local_and_job_bounded(spark, docs, monkeypatch):
+    """A scored query_data page costs the stats jobs plus ONE top-k job
+    that also ranks the page: at most 4 Spark jobs, the caller's
+    collect included. The page (and the pure-filter and sort pages)
+    comes back as a local relation — no Python RDD behind it, so
+    consuming it starts no job and no Python worker. The request plans
+    the index scan to count its splits at most once."""
+    from bigdatasearchpro_spark.plans import executed_plan
+    from bigdatasearchpro_spark.sinks.bulk import bulk_index_table
+
+    idx = "page_jobs_idx"
+    # one file per core, like any index larger than a split per core: a
+    # scan with fewer splits than cores gets fan_out's repartition, a
+    # shuffle job of its own on top of the bound
+    cores = spark.sparkContext.defaultParallelism
+    bulk_index_table(docs.select("doc_id", "text").repartition(cores), idx)
+    try:
+        assert api.resolve_index(spark, idx).rdd.getNumPartitions() >= cores
+        probes = []
+        rdd = type(docs).rdd
+        monkeypatch.setattr(
+            type(docs), "rdd",
+            property(lambda df: probes.append(1) or rdd.func(df)),
+        )
+        rows, jobs = _jobs_in(spark, "page_jobs_or", lambda: api.query_data(
+            spark, "spark join window", idx, k=5, from_=2
+        ).collect())
+        monkeypatch.undo()
+        assert 1 <= jobs <= 4
+        assert len(probes) <= 1  # fan_out plans the scan at most once
+        assert [r["rank"] for r in rows] == list(range(3, 3 + len(rows)))
+        assert rows and rows[0]["score"] >= rows[-1]["score"] > 0
+        for q, kw in (("spark join window", {}), ("vect*", {}),
+                      ("spark", {"sort": "doc_id:desc"})):
+            page = api.query_data(spark, q, idx, k=5, from_=1, **kw)
+            plan = executed_plan(page)
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+            got, jobs = _jobs_in(spark, "page_jobs_read", page.collect)
+            assert got and jobs == 0
+    finally:
+        api.delete_index(spark, idx)
+
+
+def test_explain_doc_follows_field_mapping(spark):
+    """_explain resolves the field as the search does: on an english-
+    mapped field, the query "runs" matches "run late", and the per-term
+    contributions sum to that hit's score in the search over the index
+    with the mapped analyzer."""
+    from bigdatasearchpro_spark.operators import search
+
+    idx = "explain_mapping_idx"
+    api.bulk_data_to_index(
+        spark,
+        spark.createDataFrame(
+            [(1, "walks home"), (2, "she runs"), (3, "run late"),
+             (4, "unrelated words")],
+            "doc_id long, text string",
+        ),
+        idx,
+        id_col="doc_id",
+    )
+    try:
+        api.put_mapping(spark, idx, {"text": "english"})
+        hits = {
+            r["doc_id"]: r["score"]
+            for r in search.search_topk(
+                api.resolve_index(spark, idx), "runs", 10, analyzer="english"
+            ).collect()
+        }
+        assert set(hits) == {"2", "3"}
+        exp = api.explain_doc(spark, "runs", idx, "3")
+        assert exp["matched"] and exp["details"][0]["tf"] == 1.0
+        total = sum(d["value"] for d in exp["details"])
+        assert round(total, 4) == hits["3"] == exp["value"]
+        assert not api.explain_doc(spark, "runs", idx, "1")["matched"]
+    finally:
+        api.delete_index(spark, idx)
+
+
 def test_scroll_walks_every_hit_exactly_once(spark, sf_dir, docs):
     """ES scroll: keyset batches cover the full match set exactly once,
     in _doc order, and the cursor terminates."""

@@ -54,6 +54,38 @@ def test_dedup_last_write_wins(spark):
     assert got == {"a": "new", "b": "only"}
 
 
+def test_keyed_load_gives_null_ids_auto_ids(spark):
+    """ES indexes every NULL-id document under its own generated id: a
+    keyed load keeps each NULL-id row — identical copies too — under an
+    auto id that is distinct, apart from the real ids, and the same when
+    the same input is loaded again."""
+    from bigdatasearchpro_spark.sinks.bulk import bulk_index_table
+
+    rows = [("a", 1, "old"), ("a", 2, "new"), (None, 1, "x"), (None, 1, "x"),
+            (None, 3, "y"), (None, None, None), ("b", 1, "only")]
+    df = spark.createDataFrame(rows, "id string, seq int, payload string")
+    runs = []
+    for order_by in (["seq"], ["seq"], []):
+        out = dedup.dedup_last_write_wins(df.repartition(3), "id", order_by)
+        runs.append(sorted(map(tuple, out.collect()), key=str))
+    assert runs[0] == runs[1]
+    for got in runs[::2]:
+        ids = [r[0] for r in got]
+        assert len(ids) == len(set(ids)) == 6 and None not in ids
+        auto = sorted(
+            ((r[1], r[2]) for r in got if r[0].startswith(dedup.AUTO_ID)), key=str
+        )
+        assert auto == sorted([(1, "x"), (1, "x"), (3, "y"), (None, None)],
+                              key=str)
+    assert ("a", 2, "new") in runs[0] and ("b", 1, "only") in runs[0]
+    name = "null_id_idx"
+    bulk_index_table(df, name, id_col="id", order_by=["seq"])
+    try:
+        assert spark.table(name).count() == 6
+    finally:
+        delete_index(spark, name)
+
+
 def test_keyed_load_without_order_by_is_one_join(spark):
     """A keyed load with no write-order column picks each id's winner
     by content fingerprint alone: one hash aggregate + the winner

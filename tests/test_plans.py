@@ -53,6 +53,57 @@ def test_topk_avoids_global_sort(spark, sf_dir):
     assert all(k.lower().startswith("roundrobin") for k in exchange_kinds(df))
 
 
+def test_huge_topk_falls_back_to_sort(spark, sf_dir):
+    """A top-k at or above the session's fallback threshold plans as a
+    sort plus a limit: a TakeOrdered task allocates its k-slot queue up
+    front, so k = 10**9 would take gigabytes per task and kill the JVM.
+    Below the threshold the top-k stays a TakeOrdered."""
+    from bigdatasearchpro_spark.session import TOPK_SORT_FALLBACK_ROWS
+
+    docs = load_table(spark, sf_dir, "documents")
+    ranked = docs.orderBy(F.desc("n_chars"), "doc_id")
+    assert has_take_ordered(ranked.limit(TOPK_SORT_FALLBACK_ROWS - 1))
+    for k in (TOPK_SORT_FALLBACK_ROWS, 10**9):
+        huge = ranked.limit(k)
+        plan = huge._jdf.queryExecution().executedPlan().toString()
+        assert not has_take_ordered(huge)
+        assert "Sort [" in plan and "Limit" in plan, plan
+    assert huge.count() == docs.count()
+
+
+def test_fan_out_probes_a_scan_once(spark, tmp_path, monkeypatch):
+    """fan_out plans its input to count splits at most once per analysed
+    scan: a filter over a probed unpartitioned scan (a query's match
+    set) takes the scan's count without being planned. A filter over a
+    partitioned table is probed again, because pruning can drop splits,
+    and is respread when it drops below the cores."""
+    from bigdatasearchpro_spark.sources.files import fan_out
+
+    cores = spark.sparkContext.defaultParallelism
+    rows = spark.range(4000).withColumn("part", F.col("id") % 4)
+    rows.repartition(cores).write.parquet(str(tmp_path / "flat"))
+    # 2 tasks x 4 directories: `cores` files, 2 per directory
+    rows.repartition(2).write.partitionBy("part").parquet(str(tmp_path / "parted"))
+    flat = spark.read.parquet(str(tmp_path / "flat"))
+    parted = spark.read.parquet(str(tmp_path / "parted"))
+    assert parted.rdd.getNumPartitions() >= cores
+
+    probes = []
+    rdd = type(flat).rdd
+    monkeypatch.setattr(
+        type(flat), "rdd", property(lambda df: probes.append(1) or rdd.func(df))
+    )
+    assert fan_out(flat) is flat
+    matched = flat.filter(F.col("id") > 10).select("id")
+    assert fan_out(matched) is matched
+    assert fan_out(flat) is flat
+    assert len(probes) == 1
+    assert fan_out(parted) is parted
+    one_dir = parted.filter(F.col("part") == 0)
+    assert fan_out(one_dir) is not one_dir
+    assert len(probes) == 3
+
+
 def test_stringify_is_shuffle_free(spark, sf_dir):
     assert shuffle_count(QUERIES["p1_stringify_all"](spark, sf_dir)) == 0
 
