@@ -547,58 +547,6 @@ def video_scene_cuts(
     return assets.select("asset_id", "payload").mapInPandas(gen, schema)
 
 
-def synthesize_jpeg_variant_assets(
-    ids: DataFrame,
-    id_col: str = "doc_id",
-    *,
-    bump: int = 4,
-    id_offset: int = 100000,
-) -> DataFrame:
-    """Near-duplicate VARIANTS of :func:`synthesize_jpeg_assets`'s
-    images: the same block gradient with block 0 brightened by
-    ``bump`` (kept even so the JPEG round trip stays exact), published
-    under ``asset_id + id_offset`` — the true-positive planting
-    strategy every near-dup fixture here uses (cf.
-    _with_synthetic_near_vectors)."""
-    from bigdatasearchpro_spark.multimodal.jpeg import encode_jpeg
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, payloads = [], []
-            for d in pdf[id_col].astype("int64"):
-                d = int(d)
-                nb = 2 + d % 3
-                grays = np.array(
-                    [2 * ((d * 5 + i) % 64) + 64 for i in range(2 * nb)],
-                    dtype=np.int64,
-                )
-                grays[0] += bump
-                img = np.kron(
-                    grays.astype(np.uint8).reshape(nb, 2),
-                    np.ones((8, 8), dtype=np.uint8),
-                )
-                out_ids.append(d + id_offset)
-                payloads.append(encode_jpeg(img))
-            yield pd.DataFrame(
-                {
-                    "asset_id": out_ids,
-                    "kind": ["image"] * len(payloads),
-                    "payload": payloads,
-                }
-            )
-
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType(), False),
-            T.StructField("kind", T.StringType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
-    )
-    return fan_out(ids.select(id_col)).mapInPandas(gen, schema)
-
-
 _PHASH_N = 32  # resize target; DCT over the 32x32 gray plane
 
 

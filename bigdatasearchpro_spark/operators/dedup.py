@@ -91,9 +91,11 @@ def dedup_last_write_wins(
     the n bit-identical copies of the row. The ids are distinct from
     each other, the same when the same input is loaded again, and
     apart from real ids as long as no real id uses the ``_auto-``
-    prefix. A non-string key column cannot hold such an id: its NULL
-    keys join nothing and their rows are dropped, so stringify the key
-    first (``api.bulk_data_to_index`` stringifies every column).
+    prefix. A non-string key column cannot hold such an id: its
+    NULL-key rows join nothing in the reduction, so they are unioned
+    back from the input by a narrow filter (no exchange), each its own
+    document under its NULL key — bit-identical copies too, as the
+    auto ids keep them apart on a string key.
 
     Identical duplicate rows (bit-equal content ⇒ equal fingerprint)
     all match the winning ``(key, fingerprint)``, so a final
@@ -176,7 +178,9 @@ def dedup_last_write_wins(
         *[F.first(c).alias(c) for c in others], F.count(F.lit(1)).alias("__n")
     )
     if not auto:
-        return grouped.select(*df.columns)
+        return grouped.select(*df.columns).unionByName(
+            df.filter(F.col(key).isNull())
+        )
     # an auto-keyed group expands back to its n copies, numbered 1..n
     # (0 marks a real key)
     copy = F.explode(

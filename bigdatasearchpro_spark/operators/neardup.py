@@ -63,15 +63,6 @@ def _portable_band_expr(band: int, mh_cols: list[Column]) -> Column:
     return acc
 
 
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of lowercased text."""
-    t = F.lower(text)
-    n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(t, i, k))
-    )
-
-
 def word_ngrams(tokens: Column, n: int = 3) -> Column:
     """Distinct word n-grams over a *materialized* token-array column.
 
@@ -97,25 +88,6 @@ def tokenize_words(text: Column, *, token_re: str | None = None) -> Column:
 
         token_re = TOKEN_SPLIT_RE
     return F.filter(F.split(F.lower(text), token_re), lambda t: t != "")
-
-
-def minhash_signature(shingles: Column, n_perms: int = 32) -> Column:
-    """n_perms independent min-hashes: h_i = min over shingles of
-    xxhash64(shingle, i). Equivalent to permutation MinHash up to hash
-    quality; deterministic across runs/engines.
-
-    NOTE: expression form, for small/ad-hoc use. The operator pipeline
-    uses :func:`minhash_signatures` (explode + hash-agg) instead —
-    nested higher-order functions are interpreted (not codegen'd) and
-    Catalyst's projection collapse inlines this whole tree once per
-    downstream reference, which is quadratic in practice.
-    """
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
-            for i in range(n_perms)
-        ]
-    )
 
 
 def exploded_shingles(

@@ -33,6 +33,12 @@ Scale design (100 TB corpus):
 - Expensive per-term predicates (fuzzy/regex) aggregate to the DISTINCT
   vocabulary first (|vocab| << token occurrences), match the vocabulary,
   then broadcast-semi-join doc ids back.
+- Percolation: the pair listings run ONE exploded term join on the
+  JVM (``_term_join``); the bounded counts / per-doc top-k forms, for
+  term-set and mixed-DSL rules alike, run one compile
+  (``_compile_rules``), one Arrow kernel (``_percolate_kernel``, also
+  run per micro-batch by streaming DSL percolation) and one
+  collect-or-chunk driver (``_percolate_bounded``).
 - For repeated queries, ``build_inverted_index`` materializes
   (term, doc_id, tf) + doc-length tables partitioned by term so a query
   touches only its terms' partitions.
@@ -955,29 +961,6 @@ def proximity_expr(
     return F.exists(positions(terms[0]), lambda p0: chain(1, p0, p0))
 
 
-def proximity_match(
-    docs: DataFrame,
-    phrase: str,
-    slop: int,
-    *,
-    id_col: str = "doc_id",
-    text_col: TextCols = "text",
-) -> DataFrame:
-    """ES ``match_phrase`` with slop (query-string ``"a b"~N``):
-    documents whose tokens contain the phrase terms in order within a
-    ``k-1+slop`` position window. One narrow filter (proximity_expr)."""
-    terms = analyze_query(phrase)
-    if not terms:
-        return docs.select(id_col).limit(0)
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    return (
-        fan_out(docs)
-        .filter(proximity_expr(text_col, terms, slop))
-        .select(id_col)
-    )
-
-
 def regexp_match(
     docs: DataFrame,
     pattern: str,
@@ -1558,16 +1541,6 @@ def boosting_topk(
     )
 
 
-def ids_query(
-    docs: DataFrame, ids: Sequence, *, id_col: str = "doc_id"
-) -> DataFrame:
-    """ES ``ids`` query: the documents with the given ids — one IN
-    predicate pushed to the scan (PushedFilters shows the id set)."""
-    if not ids:
-        return docs.limit(0)
-    return docs.filter(F.col(id_col).isin(list(ids)))
-
-
 def terms_lookup_filter(
     docs: DataFrame,
     field: str,
@@ -1832,29 +1805,12 @@ def percolate_many(
     unsalted, pay nothing). Semantics-preserving: salting only splits
     reducer keys, the matched (doc, query) pair set is identical.
     Output: (doc_id, query_id) matches."""
-    from bigdatasearchpro_spark.operators.skew import salted_join, top_keys
     from bigdatasearchpro_spark.sources.files import fan_out
 
-    q = registered.select(
-        F.col(query_id_col),
-        F.col("mode"),
-        F.size(F.array_distinct("terms")).alias("__need"),
-        F.explode(F.array_distinct("terms")).alias("__tok"),
-    )
-    d = fan_out(docs).select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(tokens_expr(text_col, analyzer))
-        ).alias("__tok"),
-    )
-    hot = top_keys(d, "__tok", min_count=hot_term_min_df)
-    joined = salted_join(d, q, "__tok", n_salts=n_salts, hot_keys=hot)
-    hits = joined.groupBy(
-        id_col, query_id_col, "mode", "__need"
-    ).agg(F.count("*").alias("__matched"))
-    return hits.filter(
-        F.col("__matched")
-        >= _term_threshold_expr(F.col("mode"), F.col("__need"))
+    return _term_join(
+        registered, fan_out(docs), id_col=id_col, text_col=text_col,
+        query_id_col=query_id_col, analyzer=analyzer,
+        salt=(hot_term_min_df, n_salts),
     ).select(id_col, query_id_col)
 
 
@@ -1880,32 +1836,13 @@ def percolate_highlight(
     (``n_matched``) — no second scan, no extra exchange, and the
     output stays one narrow row per alert.  Mode grammar (any / all /
     minimum_should_match) identical to percolate_many."""
-    from bigdatasearchpro_spark.operators.skew import salted_join, top_keys
     from bigdatasearchpro_spark.sources.files import fan_out
 
-    q = registered.select(
-        F.col(query_id_col),
-        F.col("mode"),
-        F.size(F.array_distinct("terms")).alias("__need"),
-        F.explode(F.array_distinct("terms")).alias("__tok"),
-    )
-    d = fan_out(docs).select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(tokens_expr(text_col, analyzer))
-        ).alias("__tok"),
-    )
-    hot = top_keys(d, "__tok", min_count=hot_term_min_df)
-    joined = salted_join(d, q, "__tok", n_salts=n_salts, hot_keys=hot)
-    hits = joined.groupBy(id_col, query_id_col, "mode", "__need").agg(
-        F.count("*").alias("__matched"),
-        F.array_join(F.sort_array(F.collect_set("__tok")), " ").alias(
-            "matched_terms"
-        ),
-    )
-    return hits.filter(
-        F.col("__matched")
-        >= _term_threshold_expr(F.col("mode"), F.col("__need"))
+    matched = F.array_join(F.sort_array(F.collect_set("__tok")), " ")
+    return _term_join(
+        registered, fan_out(docs), id_col=id_col, text_col=text_col,
+        query_id_col=query_id_col, analyzer=analyzer,
+        salt=(hot_term_min_df, n_salts), aggs=[matched.alias("matched_terms")],
     ).select(
         id_col,
         query_id_col,
@@ -1914,8 +1851,55 @@ def percolate_highlight(
     )
 
 
-def _iter_registered_chunks(registered, query_id_col, chunk_size,
-                            clause_cols: tuple = ()):
+def _term_join(
+    registered: DataFrame,
+    docs: DataFrame,
+    *,
+    id_col: str,
+    text_col: TextCols,
+    query_id_col: str,
+    analyzer: str,
+    salt: tuple[int, int] | None = None,
+    aggs: Sequence[Column] = (),
+) -> DataFrame:
+    """The one exploded term join behind the percolate listings
+    (:func:`percolate_many`, whose docstring describes the plan,
+    :func:`percolate_highlight` and
+    ``streaming.pipelines.streaming_percolate``): one hash aggregate
+    counts the matched DISTINCT terms per (doc, query) as
+    ``__matched`` (plus ``aggs``), and pairs below the query's
+    threshold drop.  ``salt = (hot_term_min_df, n_salts)`` salts hot
+    tokens; without it the query side is broadcast (no reducer key to
+    skew, and a stream can take it)."""
+    q = registered.select(
+        F.col(query_id_col),
+        F.col("mode"),
+        F.size(F.array_distinct("terms")).alias("__need"),
+        F.explode(F.array_distinct("terms")).alias("__tok"),
+    )
+    d = docs.select(
+        F.col(id_col),
+        F.explode(
+            F.array_distinct(tokens_expr(text_col, analyzer))
+        ).alias("__tok"),
+    )
+    if salt is None:
+        joined = d.join(F.broadcast(q), "__tok")
+    else:
+        from bigdatasearchpro_spark.operators.skew import salted_join, top_keys
+
+        hot = top_keys(d, "__tok", min_count=salt[0])
+        joined = salted_join(d, q, "__tok", n_salts=salt[1], hot_keys=hot)
+    hits = joined.groupBy(id_col, query_id_col, "mode", "__need").agg(
+        F.count("*").alias("__matched"), *aggs
+    )
+    return hits.filter(
+        F.col("__matched")
+        >= _term_threshold_expr(F.col("mode"), F.col("__need"))
+    )
+
+
+def _iter_registered_chunks(rules, query_id_col, chunk_size):
     """Yield lists of registered-query Rows, ``chunk_size`` rows each,
     WITHOUT collecting the whole table to the driver: toLocalIterator
     fetches one partition at a time, so peak driver memory is
@@ -1929,24 +1913,21 @@ def _iter_registered_chunks(registered, query_id_col, chunk_size,
     only place a duplicate can still be recognized: two chunks'
     outputs are value-identical for a same-rule duplicate but ALSO for
     two distinct rules that happen to match the same count, and only
-    the former may collapse (the unchunked kernels dedupe the same way
-    via their signature sets).
+    the former may collapse (the unchunked kernel dedupes the same way
+    via its signature sets).
 
-    ``clause_cols`` extends the rule identity beyond (mode, terms) —
-    the mixed-DSL kernels pass their residual-clause columns so two
-    registrations differing only in a range threshold or phrase stay
-    distinct rules."""
+    ``rules`` is a :func:`_rule_table`; the rule identity is (mode,
+    terms) plus every residual-clause column, so two registrations
+    differing only in a range threshold or phrase stay distinct
+    rules."""
     import hashlib
 
     buf: list = []
     seen: set[bytes] = set()
-    rows = registered.select(
-        query_id_col, "terms", "mode", *clause_cols
-    ).toLocalIterator()
-    for r in rows:
+    for r in rules.toLocalIterator():
         key = repr((
             r[query_id_col], r["mode"], tuple(sorted(set(r["terms"] or ()))),
-            *[r[c] for c in clause_cols],
+            *[r[c] for c in _MIXED_CLAUSE_COLS],
         )).encode()
         digest = hashlib.md5(key).digest()
         if digest in seen:
@@ -2005,116 +1986,13 @@ def percolate_counts(
     (same plan, k passes over the docs), and the chunk outputs union;
     a query_id registered in several chunks dedupes to its (single,
     chunk-independent) count row.  Bit-identical to the unchunked
-    output."""
-    import numpy as np
-    import pandas as pd
-
-    spark = docs.sparkSession
-    from pyspark.sql import types as T
-
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    qid_type = registered.schema[query_id_col].dataType
-    out_schema = T.StructType([
-        T.StructField(query_id_col, qid_type),
-        T.StructField("n_matched_docs", T.LongType()),
-    ])
-    tokenized = fan_out(docs).select(
-        tokens_expr(text_col, analyzer).alias("__toks")
+    output.  Residual-clause columns on ``registered`` are ignored
+    (:func:`percolate_mixed_counts` evaluates them)."""
+    return _percolate_bounded(
+        registered.select(query_id_col, "terms", "mode"), docs, k=None,
+        id_col=id_col, text_col=text_col, query_id_col=query_id_col,
+        analyzer=analyzer, numeric_fields=(), chunk_size=chunk_size,
     )
-
-    def chunk_counts(reg_rows) -> DataFrame | None:
-        sig_ids: dict[tuple, int] = {}
-        # (sig_id, query_id) pairs, DEDUPED: a twice-registered
-        # query_id must count once, matching percolate_many's groupBy
-        # collapse (round-11 advice)
-        sig_query_set: set[tuple[int, object]] = set()
-        for r in reg_rows:
-            terms = tuple(sorted(set(r["terms"])))
-            if not terms:
-                continue
-            key = (r["mode"], terms)
-            sid = sig_ids.setdefault(key, len(sig_ids))
-            sig_query_set.add((sid, r[query_id_col]))
-        if not sig_ids:
-            return None
-        sig_queries = sorted(sig_query_set)
-
-        n_sigs = len(sig_ids)
-        # matched-distinct-term threshold per signature (any / all /
-        # minimum_should_match — same resolution as every other form)
-        thr = np.zeros(n_sigs, dtype=np.int64)
-        inv_lists: dict[str, list[int]] = {}
-        for (mode, terms), sid in sig_ids.items():
-            thr[sid] = _term_threshold(mode, len(terms))
-            for t in terms:
-                inv_lists.setdefault(t, []).append(sid)
-        inv = {t: np.asarray(v, dtype=np.int64) for t, v in inv_lists.items()}
-        bc = spark.sparkContext.broadcast((inv, thr, n_sigs))
-
-        def count_partition(batches):
-            b_inv, b_thr, n = bc.value
-            partial = np.zeros(n, dtype=np.int64)
-            for pdf in batches:
-                for toks in pdf["__toks"]:
-                    # null text analyzes to a null token array; the doc
-                    # matches nothing (percolate_many drops it in the
-                    # explode) — skip, don't TypeError (round-11 advice)
-                    if toks is None:
-                        continue
-                    arrs = [b_inv[t] for t in set(toks) if t in b_inv]
-                    if not arrs:
-                        continue
-                    cand = np.concatenate(arrs)
-                    uniq, cnt = np.unique(cand, return_counts=True)
-                    # doc tokens and signature terms are both distinct,
-                    # so cnt == matched distinct terms, never > need
-                    hit = uniq[cnt >= b_thr[uniq]]
-                    partial[hit] += 1
-            nz = np.flatnonzero(partial)
-            yield pd.DataFrame({"__sig": nz, "__n": partial[nz]})
-
-        partials = tokenized.mapInPandas(
-            count_partition, schema="__sig long, __n long"
-        )
-        totals = partials.groupBy("__sig").agg(
-            F.sum("__n").alias("n_matched_docs")
-        )
-        expand = spark.createDataFrame(
-            sig_queries,
-            T.StructType([
-                T.StructField("__sig", T.LongType()),
-                T.StructField(query_id_col, qid_type),
-            ]),
-        )
-        return (
-            totals.join(F.broadcast(expand), "__sig")
-            .filter(F.col("n_matched_docs") > 0)
-            .select(query_id_col, "n_matched_docs")
-        )
-
-    if chunk_size is None:
-        out = chunk_counts(
-            registered.select(query_id_col, "terms", "mode").collect()
-        )
-        return out if out is not None else spark.createDataFrame([], out_schema)
-    if chunk_size < 1:
-        raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
-    outs = [
-        o
-        for rows in _iter_registered_chunks(registered, query_id_col, chunk_size)
-        if (o := chunk_counts(rows)) is not None
-    ]
-    if not outs:
-        return spark.createDataFrame([], out_schema)
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    # no value-level dedup needed: _iter_registered_chunks assigns each
-    # distinct (rule, query_id) to exactly one chunk, and a query_id
-    # registered under several DISTINCT rules legitimately emits one
-    # row per rule, exactly as the unchunked signature set does
-    return result
 
 
 def percolate_topk(
@@ -2135,7 +2013,7 @@ def percolate_topk(
     :func:`percolate_counts`; the unbounded pair LISTING is
     :func:`percolate_many`).
 
-    Same kernel family as percolate_counts: broadcast
+    Same kernel as percolate_counts: broadcast
     signature-deduped inverted index, one Arrow ``mapInPandas`` pass —
     but emission is capped IN the kernel: matched signatures sort by
     matched-count desc, expand to query ids group-by-group (ties
@@ -2154,137 +2032,16 @@ def percolate_topk(
     emits <= k rows/doc), the union re-ranks per doc under the same
     (matched desc, query_id asc) order, and the global top-k falls out
     exactly: a globally top-k query's within-chunk rank never exceeds
-    its global rank.  Bit-identical to the unchunked output."""
-    import numpy as np
-    import pandas as pd
-
+    its global rank.  Bit-identical to the unchunked output.
+    Residual-clause columns on ``registered`` are ignored
+    (:func:`percolate_mixed_topk` evaluates them)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    spark = docs.sparkSession
-    from pyspark.sql import types as T
-
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    qid_type = registered.schema[query_id_col].dataType
-    out_schema = T.StructType([
-        T.StructField(id_col, docs.schema[id_col].dataType),
-        T.StructField(query_id_col, qid_type),
-        T.StructField("matched_terms", T.LongType()),
-    ])
-    tokenized = fan_out(docs).select(
-        F.col(id_col).alias("__id"),
-        tokens_expr(text_col, analyzer).alias("__toks"),
+    return _percolate_bounded(
+        registered.select(query_id_col, "terms", "mode"), docs, k=k,
+        id_col=id_col, text_col=text_col, query_id_col=query_id_col,
+        analyzer=analyzer, numeric_fields=(), chunk_size=chunk_size,
     )
-    kernel_schema = T.StructType([
-        T.StructField("__id", docs.schema[id_col].dataType),
-        T.StructField("__qid", qid_type),
-        T.StructField("__cnt", T.LongType()),
-    ])
-
-    def chunk_topk(reg_rows) -> DataFrame | None:
-        sig_ids: dict[tuple, int] = {}
-        sig_qids: dict[int, list] = {}
-        for r in reg_rows:
-            terms = tuple(sorted(set(r["terms"])))
-            if not terms:
-                continue
-            key = (r["mode"], terms)
-            sid = sig_ids.setdefault(key, len(sig_ids))
-            sig_qids.setdefault(sid, []).append(r[query_id_col])
-        if not sig_ids:
-            return None
-
-        n_sigs = len(sig_ids)
-        thr = np.zeros(n_sigs, dtype=np.int64)
-        inv_lists: dict[str, list[int]] = {}
-        for (mode, terms), sid in sig_ids.items():
-            thr[sid] = _term_threshold(mode, len(terms))
-            for t in terms:
-                inv_lists.setdefault(t, []).append(sid)
-        inv = {t: np.asarray(v, dtype=np.int64) for t, v in inv_lists.items()}
-        # np.unique, not np.sort: a twice-registered query_id must take
-        # ONE of a doc's k slots, matching percolate_many's groupBy
-        # collapse (round-11 advice)
-        qid_arrays = {s: np.unique(np.asarray(q)) for s, q in sig_qids.items()}
-        bc = spark.sparkContext.broadcast((inv, thr, qid_arrays))
-
-        def topk_partition(batches):
-            b_inv, b_thr, b_qids = bc.value
-            for pdf in batches:
-                out_doc, out_qid, out_cnt = [], [], []
-                for doc, toks in zip(pdf["__id"], pdf["__toks"]):
-                    if toks is None:  # null text matches nothing (r11)
-                        continue
-                    arrs = [b_inv[t] for t in set(toks) if t in b_inv]
-                    if not arrs:
-                        continue
-                    cand = np.concatenate(arrs)
-                    uniq, cnt = np.unique(cand, return_counts=True)
-                    ok = cnt >= b_thr[uniq]
-                    sigs, scores = uniq[ok], cnt[ok]
-                    taken = 0
-                    # walk matched-count groups best-first; only the
-                    # group that crosses the k boundary pays a sort
-                    for c in np.sort(np.unique(scores))[::-1]:
-                        group = np.concatenate(
-                            [b_qids[int(s)] for s in sigs[scores == c]]
-                        )
-                        group = np.unique(group)[: k - taken]
-                        out_doc.extend([doc] * len(group))
-                        out_qid.extend(group.tolist())
-                        out_cnt.extend([int(c)] * len(group))
-                        taken += len(group)
-                        if taken >= k:
-                            break
-                yield pd.DataFrame({
-                    "__id": out_doc, "__qid": out_qid, "__cnt": out_cnt,
-                })
-
-        return tokenized.mapInPandas(topk_partition, schema=kernel_schema)
-
-    def finish(kernel_out: DataFrame) -> DataFrame:
-        return kernel_out.select(
-            F.col("__id").alias(id_col),
-            F.col("__qid").alias(query_id_col),
-            F.col("__cnt").alias("matched_terms"),
-        )
-
-    if chunk_size is None:
-        out = chunk_topk(
-            registered.select(query_id_col, "terms", "mode").collect()
-        )
-        if out is None:
-            return spark.createDataFrame([], out_schema)
-        return finish(out)
-    if chunk_size < 1:
-        raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
-    outs = [
-        o
-        for rows in _iter_registered_chunks(registered, query_id_col, chunk_size)
-        if (o := chunk_topk(rows)) is not None
-    ]
-    if not outs:
-        return spark.createDataFrame([], out_schema)
-    merged = outs[0]
-    for o in outs[1:]:
-        merged = merged.unionByName(o)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("__id").orderBy(F.desc("__cnt"), F.asc("__qid"))
-    reranked = (
-        # full-row dedup BEFORE ranking: a qid registered under two
-        # DISTINCT rules in different chunks can hit one doc at the
-        # SAME count — the unchunked kernel's np.unique gives it one
-        # k-slot, so the identical rows must collapse; at distinct
-        # counts the unchunked kernel emits both and both survive here
-        # (same-rule duplicates never reach this point — chunk build
-        # drops them)
-        merged.dropDuplicates(["__id", "__qid", "__cnt"])
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
-    )
-    return finish(reranked)
 
 
 def _mixed_residual_ok(numeric_map_col, doc_str_col) -> Column:
@@ -2411,9 +2168,7 @@ def percolate_mixed(
     ``prefix`` — some analyzed token starts with it) clauses, all
     AND-composed with the rest; absent columns are treated as null
     clauses, so term+range+phrase tables run unchanged."""
-    registered = _with_mixed_clause_cols(registered).select(
-        query_id_col, "terms", "mode", *_MIXED_CLAUSE_COLS
-    ).dropDuplicates()
+    registered = _rule_table(registered, query_id_col).dropDuplicates()
     term_pairs = percolate_many(
         registered.select(query_id_col, "terms", "mode"),
         docs,
@@ -2458,40 +2213,41 @@ def percolate_mixed(
     )
 
 
-_MIXED_CLAUSE_COLS = (
-    "range_field", "range_op", "range_value", "phrase",
-    "neg_terms", "exists_field", "tok_prefix", "residual_min_match",
-)
 _MIXED_CLAUSE_TYPES = {
     "range_field": "string", "range_op": "string",
     "range_value": "double", "phrase": "string",
     "neg_terms": "array<string>", "exists_field": "string",
     "tok_prefix": "string", "residual_min_match": "int",
 }
+_MIXED_CLAUSE_COLS = tuple(_MIXED_CLAUSE_TYPES)
 _RANGE_OPS = {"lt": 0, "lte": 1, "gt": 2, "gte": 3}
 
 
-def _with_mixed_clause_cols(registered: DataFrame) -> DataFrame:
-    """Add any missing mixed-DSL clause column as a typed null, so the
-    r12 grammar extension (``must_not`` / ``exists`` / ``prefix``)
-    stays drop-in for term+range+phrase registered tables."""
-    for c in _MIXED_CLAUSE_COLS:
-        if c not in registered.columns:
-            registered = registered.withColumn(
-                c, F.lit(None).cast(_MIXED_CLAUSE_TYPES[c])
-            )
-    return registered
+def _rule_table(registered: DataFrame, query_id_col: str) -> DataFrame:
+    """The registered side as percolation rules: ``(query_id, terms,
+    mode)`` plus every residual-clause column, a missing one as a
+    typed null — so term-only, term+range+phrase and full-DSL tables
+    all run through every entry point (a pure-term rule is one whose
+    residual clauses are all null)."""
+    return registered.select(
+        query_id_col, "terms", "mode",
+        *[
+            F.col(c) if c in registered.columns
+            else F.lit(None).cast(t).alias(c)
+            for c, t in _MIXED_CLAUSE_TYPES.items()
+        ],
+    )
 
 
-def _compile_mixed_rules(reg_rows, numeric_fields, query_id_col):
-    """Compile mixed (term + range + phrase + must_not + exists +
-    prefix) rule rows into the broadcastable kernel tables shared by
-    :func:`percolate_mixed_counts` and :func:`percolate_mixed_topk`:
-    a per-signature matched-term threshold (any / all /
-    minimum_should_match resolved by :func:`_term_threshold`), a
-    residual tuple (range
-    field index into ``numeric_fields`` / op code / threshold,
-    space-guarded phrase, must_not term tuples, exists field index,
+def _compile_rules(reg_rows, numeric_fields, query_id_col):
+    """The one percolation compile: rule rows (term clause plus the
+    range / phrase / must_not / exists / prefix residuals; a pure-term
+    rule is one whose residual columns are all NULL) become the
+    broadcastable tables of :func:`_percolate_kernel`: a per-signature
+    matched-term threshold (any / all / minimum_should_match resolved
+    by :func:`_term_threshold`), a residual tuple (range field index
+    into ``numeric_fields`` / op code / threshold, space-guarded
+    phrase, must_not term tuples, exists field index,
     leading-space-guarded token prefix), the term->signatures inverted
     index, and per-signature DEDUPED qid arrays (np.unique — a
     twice-registered query_id counts once, matching percolate_many's
@@ -2500,8 +2256,10 @@ def _compile_mixed_rules(reg_rows, numeric_fields, query_id_col):
     distinct.  Sentinel ``-2`` in the range/exists field index marks a
     clause that can never match (malformed op / null value / field
     outside ``numeric_fields``) — the kernel-side twin of the
-    listing's null ``try_element_at``.  Returns None when no row has a
-    non-empty term set."""
+    listing's null ``try_element_at``.  The residual tuple is None
+    when no rule has a residual clause, so pure-term rules pay no
+    residual check.  Returns None when no row has a non-empty term
+    set."""
     import numpy as np
 
     sig_ids: dict[tuple, int] = {}
@@ -2545,6 +2303,7 @@ def _compile_mixed_rules(reg_rows, numeric_fields, query_id_col):
     req = np.zeros(n_sigs, dtype=np.int64)
     field_pos = {f: i for i, f in enumerate(numeric_fields)}
     inv_lists: dict[str, list[int]] = {}
+    any_residual = False
     for key, sid in sig_ids.items():
         mode, terms, rfield, rop, rval, phr, neg, exf, pfx, rmm = key
         thr[sid] = _term_threshold(mode, len(terms))
@@ -2566,6 +2325,7 @@ def _compile_mixed_rules(reg_rows, numeric_fields, query_id_col):
         npresent = sum(
             x is not None for x in (rfield, phr, neg, exf, pfx)
         )
+        any_residual = any_residual or npresent > 0
         # ES edge: msm over zero should clauses is ignored (req 0)
         req[sid] = (
             (int(rmm) if npresent > 0 else 0)
@@ -2578,7 +2338,11 @@ def _compile_mixed_rules(reg_rows, numeric_fields, query_id_col):
     qid_arrays = {
         s: np.unique(np.asarray(sorted(q))) for s, q in sig_qids.items()
     }
-    residuals = (rf_idx, op_code, rv, phrases, negs, ex_idx, prefs, req)
+    residuals = (
+        (rf_idx, op_code, rv, phrases, negs, ex_idx, prefs, req)
+        if any_residual
+        else None
+    )
     return qid_arrays, thr, residuals, inv
 
 
@@ -2642,208 +2406,21 @@ def percolate_mixed_counts(
     the broadcast inverted index, and each candidate signature then
     evaluates its residual clauses IN the kernel against the doc's
     numeric fields and space-guarded token string — term -> candidate,
-    then per-signature residual predicate, exactly the generalization
-    the kernel family was designed for.
+    then per-signature residual predicate.  It is the same compile,
+    kernel and driver as percolate_counts, whose rules are these with
+    every residual clause null.
 
     ``chunk_size``: stream the registered side via ``toLocalIterator``
     in chunk-sized slices when it is too large to collect — same k-pass
     contract as :func:`percolate_counts`; each distinct (rule,
     query_id) lands in exactly one chunk, so the union is bit-identical
     to the unchunked output."""
-    import numpy as np
-    import pandas as pd
-
-    spark = docs.sparkSession
-    from pyspark.sql import types as T
-
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    qid_type = registered.schema[query_id_col].dataType
-    out_schema = T.StructType([
-        T.StructField(query_id_col, qid_type),
-        T.StructField("n_matched_docs", T.LongType()),
-    ])
-    ncols = [f"__n{i}" for i in range(len(numeric_fields))]
-    tokenized = fan_out(docs).select(
-        tokens_expr(text_col, analyzer).alias("__toks"),
-        *[
-            F.col(f).cast("double").alias(c)
-            for f, c in zip(numeric_fields, ncols)
-        ],
+    return _percolate_bounded(
+        registered, docs, k=None,
+        id_col=id_col, text_col=text_col, query_id_col=query_id_col,
+        analyzer=analyzer, numeric_fields=numeric_fields,
+        chunk_size=chunk_size,
     )
-
-    def chunk_counts(reg_rows) -> DataFrame | None:
-        compiled = _compile_mixed_rules(reg_rows, numeric_fields, query_id_col)
-        if compiled is None:
-            return None
-        qid_arrays, thr, residuals, inv = compiled
-        n_sigs = len(thr)
-        sig_queries = sorted(
-            (s, q) for s, arr in qid_arrays.items() for q in arr.tolist()
-        )
-        bc = spark.sparkContext.broadcast(
-            (inv, thr, residuals, n_sigs)
-        )
-
-        def count_partition(batches):
-            b_inv, b_thr, b_res, n = bc.value
-            partial = np.zeros(n, dtype=np.int64)
-            for pdf in batches:
-                nvals = [pdf[c].to_numpy(dtype=np.float64) for c in ncols]
-                for i, toks in enumerate(pdf["__toks"]):
-                    if toks is None:
-                        continue
-                    tset = set(toks)
-                    arrs = [b_inv[t] for t in tset if t in b_inv]
-                    if not arrs:
-                        continue
-                    cand = np.concatenate(arrs)
-                    uniq, cnt = np.unique(cand, return_counts=True)
-                    hit = uniq[cnt >= b_thr[uniq]]
-                    if len(hit) == 0:
-                        continue
-                    box = [None]  # lazy tok_str shared across sigs
-                    for s in hit:
-                        if _residual_passes(
-                            b_res, int(s), i, nvals, toks, tset, box
-                        ):
-                            partial[s] += 1
-            nz = np.flatnonzero(partial)
-            yield pd.DataFrame({"__sig": nz, "__n": partial[nz]})
-
-        partials = tokenized.mapInPandas(
-            count_partition,
-            schema=T.StructType([
-                T.StructField("__sig", T.LongType()),
-                T.StructField("__n", T.LongType()),
-            ]),
-        )
-        totals = partials.groupBy("__sig").agg(
-            F.sum("__n").alias("n_matched_docs")
-        )
-        expand = spark.createDataFrame(
-            [(s, q) for s, q in sig_queries],
-            T.StructType([
-                T.StructField("__sig", T.LongType()),
-                T.StructField(query_id_col, qid_type),
-            ]),
-        )
-        return (
-            totals.join(F.broadcast(expand), "__sig")
-            .filter(F.col("n_matched_docs") > 0)
-            .select(query_id_col, "n_matched_docs")
-        )
-
-    registered = _with_mixed_clause_cols(registered)
-    reg_cols = (query_id_col, "terms", "mode", *_MIXED_CLAUSE_COLS)
-    if chunk_size is None:
-        out = chunk_counts(registered.select(*reg_cols).collect())
-        return out if out is not None else spark.createDataFrame([], out_schema)
-    if chunk_size < 1:
-        raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
-    outs = [
-        o
-        for rows in _iter_registered_chunks(
-            registered, query_id_col, chunk_size,
-            clause_cols=_MIXED_CLAUSE_COLS,
-        )
-        if (o := chunk_counts(rows)) is not None
-    ]
-    if not outs:
-        return spark.createDataFrame([], out_schema)
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    # no value-level dedup: chunk build assigns each distinct (rule,
-    # query_id) to exactly one chunk, and a query_id under several
-    # DISTINCT rules legitimately emits one row per rule — exactly the
-    # unchunked signature set's behavior
-    return result
-
-
-def _mixed_topk_kernel(
-    spark,
-    tokenized: DataFrame,
-    reg_rows,
-    *,
-    k: int,
-    ncols: list,
-    numeric_fields: tuple,
-    query_id_col: str,
-    kernel_schema,
-) -> DataFrame | None:
-    """ONE stateless Arrow ``mapInPandas`` pass over ``tokenized``
-    (``__id`` / ``__toks`` / the cast numeric columns in ``ncols``)
-    emitting each doc's top-``k`` matched mixed-DSL rules as
-    (``__id``, ``__qid``, ``__cnt``).  Shared by
-    :func:`percolate_mixed_topk` (batch, one call per registered
-    chunk) and :func:`bigdatasearchpro_spark.streaming.pipelines.
-    streaming_percolate_dsl` — the kernel is per-row (no shuffle, no
-    state), so an append-mode stream emits the exact batch result per
-    micro-batch.  Returns None when no rule has a non-empty term
-    set."""
-    import numpy as np
-    import pandas as pd
-
-    compiled = _compile_mixed_rules(reg_rows, numeric_fields, query_id_col)
-    if compiled is None:
-        return None
-    qid_arrays, thr, residuals, inv = compiled
-    bc = spark.sparkContext.broadcast(
-        (inv, thr, residuals, qid_arrays)
-    )
-
-    def topk_partition(batches):
-        b_inv, b_thr, b_res, b_qids = bc.value
-        for pdf in batches:
-            nvals = [pdf[c].to_numpy(dtype=np.float64) for c in ncols]
-            out_doc, out_qid, out_cnt = [], [], []
-            for i, (doc, toks) in enumerate(
-                zip(pdf["__id"], pdf["__toks"])
-            ):
-                if toks is None:  # null text matches nothing
-                    continue
-                tset = set(toks)
-                arrs = [b_inv[t] for t in tset if t in b_inv]
-                if not arrs:
-                    continue
-                cand = np.concatenate(arrs)
-                uniq, cnt = np.unique(cand, return_counts=True)
-                ok = cnt >= b_thr[uniq]
-                sigs, scores = uniq[ok], cnt[ok]
-                if len(sigs) == 0:
-                    continue
-                # residual gate BEFORE slot assignment: a rule whose
-                # residual composition fails never consumes a k-slot
-                box = [None]
-                keep = np.fromiter(
-                    (
-                        _residual_passes(
-                            b_res, int(s), i, nvals, toks, tset, box
-                        )
-                        for s in sigs
-                    ),
-                    dtype=bool,
-                    count=len(sigs),
-                )
-                sigs, scores = sigs[keep], scores[keep]
-                taken = 0
-                for c in np.sort(np.unique(scores))[::-1]:
-                    group = np.concatenate(
-                        [b_qids[int(s)] for s in sigs[scores == c]]
-                    )
-                    group = np.unique(group)[: k - taken]
-                    out_doc.extend([doc] * len(group))
-                    out_qid.extend(group.tolist())
-                    out_cnt.extend([int(c)] * len(group))
-                    taken += len(group)
-                    if taken >= k:
-                        break
-            yield pd.DataFrame({
-                "__id": out_doc, "__qid": out_qid, "__cnt": out_cnt,
-            })
-
-    return tokenized.mapInPandas(topk_partition, schema=kernel_schema)
 
 
 def percolate_mixed_topk(
@@ -2867,90 +2444,230 @@ def percolate_mixed_topk(
     (range over the doc's numeric fields, phrase over the
     space-guarded token string) BEFORE the best-count-first slot walk,
     so a rule that fails its residual never consumes a k-slot —
-    matching the listing's AND-composition exactly.  Completes the
-    kernel family: listing / counts / top-k for both term-set and
-    mixed-DSL rules.
+    matching the listing's AND-composition exactly.  It is the same
+    kernel as percolate_topk, whose rules are these with every
+    residual clause null.
 
     ``chunk_size``: k-pass streamed registered side, merged by the
     same full-row dedup + (matched desc, query_id asc) re-rank as
     :func:`percolate_topk` — a globally top-k rule's within-chunk rank
     never exceeds its global rank, so the merge is exact."""
-    spark = docs.sparkSession
+    return _percolate_bounded(
+        registered, docs, k=k,
+        id_col=id_col, text_col=text_col, query_id_col=query_id_col,
+        analyzer=analyzer, numeric_fields=numeric_fields,
+        chunk_size=chunk_size,
+    )
+
+
+def _percolate_kernel(
+    docs: DataFrame,
+    rules: DataFrame,
+    reg_rows,
+    *,
+    k: int | None,
+    id_col: str,
+    text_col: TextCols,
+    query_id_col: str,
+    analyzer: str,
+    numeric_fields: tuple,
+) -> DataFrame:
+    """The one percolation kernel: compile ``reg_rows`` (rows of the
+    :func:`_rule_table` ``rules``) with :func:`_compile_rules`,
+    broadcast the tables, and run ONE stateless Arrow ``mapInPandas``
+    pass over ``docs``.  Per doc, its distinct tokens look up candidate
+    signatures in the inverted index, a numpy unique/count gives each
+    candidate's matched distinct-term count, candidates under their
+    threshold drop, and the rest pass the residual gate (skipped when
+    no rule has a residual clause).  ``k`` None emits the per-query
+    partial counts of :func:`percolate_counts`, else the per-doc
+    top-k walk of :func:`percolate_topk`.  The pass keeps no state, so
+    a stream runs it per micro-batch.  With no usable rule the result
+    is an empty frame of the output shape, batch or stream."""
+    import numpy as np
+    import pandas as pd
     from pyspark.sql import types as T
 
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    qid_type = registered.schema[query_id_col].dataType
-    out_schema = T.StructType([
-        T.StructField(id_col, docs.schema[id_col].dataType),
-        T.StructField(query_id_col, qid_type),
-        T.StructField("matched_terms", T.LongType()),
-    ])
+    qid_type = rules.schema[query_id_col].dataType
+    empty = docs.select(
+        *([] if k is None else [F.col(id_col)]),
+        F.lit(None).cast(qid_type).alias(query_id_col),
+        F.lit(None).cast("long").alias(
+            "n_matched_docs" if k is None else "matched_terms"
+        ),
+    ).where(F.lit(False))
+    compiled = _compile_rules(reg_rows, numeric_fields, query_id_col)
+    if compiled is None:
+        return empty
+    qid_arrays, thr, residuals, inv = compiled
+    n_sigs = len(thr)
+    spark = docs.sparkSession
+    bc = spark.sparkContext.broadcast(
+        (inv, thr, residuals, None if k is None else qid_arrays)
+    )
     ncols = [f"__n{i}" for i in range(len(numeric_fields))]
-    tokenized = fan_out(docs).select(
-        F.col(id_col).alias("__id"),
+    tokenized = docs.select(
+        *([] if k is None else [F.col(id_col)]),
         tokens_expr(text_col, analyzer).alias("__toks"),
         *[
             F.col(f).cast("double").alias(c)
             for f, c in zip(numeric_fields, ncols)
         ],
     )
-    kernel_schema = T.StructType([
-        T.StructField("__id", docs.schema[id_col].dataType),
-        T.StructField("__qid", qid_type),
-        T.StructField("__cnt", T.LongType()),
-    ])
 
-    def chunk_topk(reg_rows) -> DataFrame | None:
-        return _mixed_topk_kernel(
-            spark, tokenized, reg_rows, k=k, ncols=ncols,
-            numeric_fields=numeric_fields, query_id_col=query_id_col,
-            kernel_schema=kernel_schema,
+    def matches(pdf):
+        """(row, matched signatures, their matched distinct-term
+        counts) for each doc of ``pdf`` that some rule matches."""
+        b_inv, b_thr, b_res, _ = bc.value
+        nvals = [pdf[c].to_numpy(dtype=np.float64) for c in ncols]
+        for i, toks in enumerate(pdf["__toks"]):
+            # null text analyzes to a null token array; the doc matches
+            # nothing (the listing drops it in the explode)
+            if toks is None:
+                continue
+            tset = set(toks)
+            arrs = [b_inv[t] for t in tset if t in b_inv]
+            if not arrs:
+                continue
+            cand = np.concatenate(arrs)
+            uniq, cnt = np.unique(cand, return_counts=True)
+            # doc tokens and signature terms are both distinct, so cnt
+            # == matched distinct terms, never > need
+            ok = cnt >= b_thr[uniq]
+            sigs, scores = uniq[ok], cnt[ok]
+            if b_res is not None and len(sigs):
+                box = [None]  # lazy token string shared across sigs
+                keep = np.fromiter(
+                    (
+                        _residual_passes(
+                            b_res, int(s), i, nvals, toks, tset, box
+                        )
+                        for s in sigs
+                    ),
+                    dtype=bool,
+                    count=len(sigs),
+                )
+                sigs, scores = sigs[keep], scores[keep]
+            if len(sigs):
+                yield i, sigs, scores
+
+    if k is None:
+        def count_partition(batches):
+            partial = np.zeros(n_sigs, dtype=np.int64)
+            for pdf in batches:
+                for _, sigs, _ in matches(pdf):
+                    partial[sigs] += 1
+            nz = np.flatnonzero(partial)
+            yield pd.DataFrame({"__sig": nz, "__n": partial[nz]})
+
+        partials = tokenized.mapInPandas(
+            count_partition, schema="__sig long, __n long"
+        )
+        totals = partials.groupBy("__sig").agg(
+            F.sum("__n").alias("n_matched_docs")
+        )
+        expand = spark.createDataFrame(
+            sorted(
+                (s, q) for s, arr in qid_arrays.items() for q in arr.tolist()
+            ),
+            T.StructType([
+                T.StructField("__sig", T.LongType()),
+                T.StructField(query_id_col, qid_type),
+            ]),
+        )
+        return totals.join(F.broadcast(expand), "__sig").select(
+            query_id_col, "n_matched_docs"
         )
 
+    def topk_partition(batches):
+        b_qids = bc.value[3]
+        for pdf in batches:
+            ids = pdf[id_col].tolist()
+            out_doc, out_qid, out_cnt = [], [], []
+            for i, sigs, scores in matches(pdf):
+                taken = 0
+                # walk matched-count groups best-first; only the group
+                # that crosses the k boundary pays a sort
+                for c in np.sort(np.unique(scores))[::-1]:
+                    group = np.concatenate(
+                        [b_qids[int(s)] for s in sigs[scores == c]]
+                    )
+                    group = np.unique(group)[: k - taken]
+                    out_doc.extend([ids[i]] * len(group))
+                    out_qid.extend(group.tolist())
+                    out_cnt.extend([int(c)] * len(group))
+                    taken += len(group)
+                    if taken >= k:
+                        break
+            yield pd.DataFrame({
+                id_col: out_doc, query_id_col: out_qid,
+                "matched_terms": out_cnt,
+            })
 
-    def finish(kernel_out: DataFrame) -> DataFrame:
-        return kernel_out.select(
-            F.col("__id").alias(id_col),
-            F.col("__qid").alias(query_id_col),
-            F.col("__cnt").alias("matched_terms"),
-        )
+    return tokenized.mapInPandas(
+        topk_partition,
+        schema=T.StructType([
+            T.StructField(f.name, f.dataType) for f in empty.schema
+        ]),
+    )
 
-    registered = _with_mixed_clause_cols(registered)
-    reg_cols = (query_id_col, "terms", "mode", *_MIXED_CLAUSE_COLS)
+
+def _percolate_bounded(
+    registered: DataFrame,
+    docs: DataFrame,
+    *,
+    k: int | None,
+    id_col: str,
+    text_col: TextCols,
+    query_id_col: str,
+    analyzer: str,
+    numeric_fields: tuple,
+    chunk_size: int | None,
+) -> DataFrame:
+    """The one bounded percolation driver behind
+    :func:`percolate_counts` / :func:`percolate_topk` (pure-term rules)
+    and :func:`percolate_mixed_counts` / :func:`percolate_mixed_topk`:
+    collect the rules, or stream them in ``chunk_size`` chunks
+    (:func:`_iter_registered_chunks`, whose chunk identity needs no
+    value-level dedup of the counts), run :func:`_percolate_kernel`
+    per chunk, union, and re-rank a chunked top-k per doc."""
+    from bigdatasearchpro_spark.sources.files import fan_out
+
+    rules = _rule_table(registered, query_id_col)
     if chunk_size is None:
-        out = chunk_topk(registered.select(*reg_cols).collect())
-        if out is None:
-            return spark.createDataFrame([], out_schema)
-        return finish(out)
-    if chunk_size < 1:
+        chunks = [rules.collect()]
+    elif chunk_size < 1:
         raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
-    outs = [
-        o
-        for rows in _iter_registered_chunks(
-            registered, query_id_col, chunk_size,
-            clause_cols=_MIXED_CLAUSE_COLS,
+    else:
+        chunks = _iter_registered_chunks(rules, query_id_col, chunk_size)
+    docs = fan_out(docs)
+
+    def kernel(rows):
+        return _percolate_kernel(
+            docs, rules, rows, k=k, id_col=id_col, text_col=text_col,
+            query_id_col=query_id_col, analyzer=analyzer,
+            numeric_fields=numeric_fields,
         )
-        if (o := chunk_topk(rows)) is not None
-    ]
-    if not outs:
-        return spark.createDataFrame([], out_schema)
-    merged = outs[0]
-    for o in outs[1:]:
-        merged = merged.unionByName(o)
+
+    result = reduce(
+        DataFrame.unionByName, [kernel(rows) for rows in chunks] or [kernel([])]
+    )
+    if k is None or chunk_size is None:
+        return result
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("__id").orderBy(F.desc("__cnt"), F.asc("__qid"))
-    reranked = (
-        # same merge argument as percolate_topk: full-row dedup first (a
-        # qid under two distinct rules in different chunks can hit one
-        # doc at the same count — one k-slot), then exact global re-rank
-        merged.dropDuplicates(["__id", "__qid", "__cnt"])
+    # full-row dedup BEFORE ranking: a qid registered under two
+    # DISTINCT rules in different chunks can hit one doc at the SAME
+    # count, and the unchunked kernel gives it one k-slot
+    w = Window.partitionBy(id_col).orderBy(
+        F.desc("matched_terms"), F.asc(query_id_col)
+    )
+    return (
+        result.dropDuplicates()
         .withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= k)
         .drop("__rk")
     )
-    return finish(reranked)
 
 
 def decay_expr(

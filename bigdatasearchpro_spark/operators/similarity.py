@@ -534,13 +534,6 @@ def train_pq(
     return books
 
 
-def _unit_vec_expr(vec_col: str) -> Column:
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    n = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-    safe = F.when(n > 0, n).otherwise(F.lit(1.0))
-    return F.transform(v, lambda x: x / safe)
-
-
 def encode_pq(
     df: DataFrame,
     codebooks: np.ndarray,

@@ -27,11 +27,6 @@ STOPWORDS = (
 )
 
 
-def whitespace_token_count(text: Column) -> Column:
-    toks = F.filter(F.split(F.trim(text), WORD_SPLIT_RE), lambda t: t != "")
-    return F.size(toks)
-
-
 def bpe_ish_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_RE), 0))
 

@@ -59,27 +59,3 @@ def jdbc_full_scan(
     for k, v in (properties or {}).items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def jdbc_scan_options(
-    url: str,
-    table: str,
-    *,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 32,
-    fetch_size: int = 10_000,
-) -> dict[str, str]:
-    """Pure option-dict builder (unit-testable without a database)."""
-    opts = {"url": url, "dbtable": table, "fetchsize": str(fetch_size)}
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partition_column requires lower_bound and upper_bound")
-        opts.update(
-            partitionColumn=partition_column,
-            lowerBound=str(lower_bound),
-            upperBound=str(upper_bound),
-            numPartitions=str(num_partitions),
-        )
-    return opts

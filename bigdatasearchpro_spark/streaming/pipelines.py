@@ -577,35 +577,13 @@ def streaming_percolate(
     :func:`search.percolate_many` per micro-batch, with only the agg's
     exchange keyed on the pair. Append-mode friendly: every alert is
     emitted once, in the batch its document arrived."""
-    from bigdatasearchpro_spark.operators.search import tokens_expr
-
-    # __need counts DISTINCT terms (the join side is deduped via
-    # array_distinct, so sizing the raw array would make an 'all' query
-    # with a repeated token silently unmatchable — a dropped alert).
-    # No salting here: the query side is broadcast, so the join has no
+    # No salting: the query side is broadcast, so the join has no
     # per-term reducer key to skew.
-    q = registered.select(
-        F.col("query_id"),
-        F.col("mode"),
-        F.size(F.array_distinct("terms")).alias("__need"),
-        F.explode(F.array_distinct("terms")).alias("__term"),
-    )
-    d = doc_stream.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(tokens_expr(text_col, analyzer))
-        ).alias("__tok"),
-    )
-    hits = (
-        d.join(F.broadcast(q), F.col("__tok") == F.col("__term"))
-        .groupBy(id_col, "query_id", "mode", "__need")
-        .agg(F.count("*").alias("__matched"))
-    )
-    from bigdatasearchpro_spark.operators.search import _term_threshold_expr
+    from bigdatasearchpro_spark.operators.search import _term_join
 
-    return hits.filter(
-        F.col("__matched")
-        >= _term_threshold_expr(F.col("mode"), F.col("__need"))
+    return _term_join(
+        registered, doc_stream, id_col=id_col, text_col=text_col,
+        query_id_col="query_id", analyzer=analyzer,
     ).select(id_col, "query_id")
 
 
@@ -628,59 +606,28 @@ def streaming_percolate_dsl(
     term-sets.
 
     Scale shape: the registered side is compiled ONCE at plan time
-    into the broadcast inverted index + residual tables (the bounded
-    kernel's tables — ES itself bounds percolator indices), and every
-    micro-batch runs ONE stateless Arrow ``mapInPandas`` pass — zero
-    shuffle, zero state store, <= k alert rows per document.  Because
-    the kernel is per-row, append mode emits EXACTLY the batch
-    percolation of each arriving document, once, in its own batch —
-    there is nothing to reconcile at the sink.  (The term-set form
+    into the broadcast inverted index + residual tables (ES itself
+    bounds percolator indices), and every micro-batch runs the top-k
+    emitter of the one bounded percolation kernel
+    (``search._percolate_kernel``, the kernel behind
+    :func:`search.percolate_mixed_topk`): ONE stateless Arrow
+    ``mapInPandas`` pass — zero shuffle, zero state store, <= k alert
+    rows per document.  Because the kernel is per-row, append mode
+    emits EXACTLY the batch percolation of each arriving document,
+    once, in its own batch — there is nothing to reconcile at the
+    sink.  (The term-set form
     :func:`streaming_percolate` keeps its broadcast token join; this
     form exists because a join cannot evaluate per-rule residuals
     without carrying every doc's residual columns through the pair
     exchange.)"""
-    from pyspark.sql import types as T
-
     from bigdatasearchpro_spark.operators.search import (
-        _MIXED_CLAUSE_COLS,
-        _mixed_topk_kernel,
-        _with_mixed_clause_cols,
-        tokens_expr,
+        _percolate_kernel,
+        _rule_table,
     )
 
-    spark = doc_stream.sparkSession
-    registered = _with_mixed_clause_cols(registered)
-    qid_type = registered.schema["query_id"].dataType
-    reg_rows = registered.select(
-        "query_id", "terms", "mode", *_MIXED_CLAUSE_COLS
-    ).collect()
-    ncols = [f"__n{i}" for i in range(len(numeric_fields))]
-    tokenized = doc_stream.select(
-        F.col(id_col).alias("__id"),
-        tokens_expr(text_col, analyzer).alias("__toks"),
-        *[
-            F.col(f).cast("double").alias(c)
-            for f, c in zip(numeric_fields, ncols)
-        ],
-    )
-    kernel_schema = T.StructType([
-        T.StructField("__id", doc_stream.schema[id_col].dataType),
-        T.StructField("__qid", qid_type),
-        T.StructField("__cnt", T.LongType()),
-    ])
-    out = _mixed_topk_kernel(
-        spark, tokenized, reg_rows, k=k, ncols=ncols,
-        numeric_fields=numeric_fields, query_id_col="query_id",
-        kernel_schema=kernel_schema,
-    )
-    if out is None:  # no usable rules: empty stream of the output shape
-        out = tokenized.select(
-            F.col("__id"),
-            F.lit(None).cast(qid_type).alias("__qid"),
-            F.lit(None).cast("long").alias("__cnt"),
-        ).where(F.lit(False))
-    return out.select(
-        F.col("__id").alias(id_col),
-        F.col("__qid").alias("query_id"),
-        F.col("__cnt").alias("matched_terms"),
+    rules = _rule_table(registered, "query_id")
+    return _percolate_kernel(
+        doc_stream, rules, rules.collect(), k=k, id_col=id_col,
+        text_col=text_col, query_id_col="query_id", analyzer=analyzer,
+        numeric_fields=numeric_fields,
     )

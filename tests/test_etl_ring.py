@@ -86,6 +86,25 @@ def test_keyed_load_gives_null_ids_auto_ids(spark):
         delete_index(spark, name)
 
 
+def test_keyed_load_keeps_null_keys_of_non_string_key(spark):
+    """A non-string key column cannot hold an auto id, but its NULL-key
+    rows must not be dropped: each stays its own document under its
+    NULL key, bit-identical copies included, with or without a write
+    order."""
+    rows = [(1, 1, "x"), (None, 2, "y"), (None, 3, "z"), (None, 3, "z"),
+            (1, 0, "old")]
+    df = spark.createDataFrame(rows, "id int, seq int, payload string")
+    for order_by in (["seq"], []):
+        got = dedup.dedup_last_write_wins(df.repartition(3), "id", order_by)
+        got = sorted(map(tuple, got.collect()), key=str)
+        assert [r for r in got if r[0] is None] == sorted(
+            [(None, 2, "y"), (None, 3, "z"), (None, 3, "z")], key=str
+        )
+        assert len([r for r in got if r[0] == 1]) == 1
+    got = dedup.dedup_last_write_wins(df, "id", ["seq"]).collect()
+    assert (1, 1, "x") in map(tuple, got) and len(got) == 4
+
+
 def test_keyed_load_without_order_by_is_one_join(spark):
     """A keyed load with no write-order column picks each id's winner
     by content fingerprint alone: one hash aggregate + the winner

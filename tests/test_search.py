@@ -1353,6 +1353,31 @@ def test_percolate_mixed_chunked_bit_identical(spark):
     )
     assert ch_topk == un_topk and len(un_topk) > 0
 
+def test_percolate_term_forms_ignore_residual_columns(spark):
+    """The pure-term entry points read only the term clause: a
+    registered table that also carries residual columns no doc passes
+    (a range and a phrase) gives the same percolate_counts,
+    percolate_topk and percolate_many answers as the same table with
+    those columns dropped."""
+    registered, docs = _mixed_fixture(spark)
+    residual = registered.withColumns({
+        "range_field": F.lit("price"), "range_op": F.lit("lt"),
+        "range_value": F.lit(-1.0), "phrase": F.lit("never there"),
+    })
+    bare = registered.select("query_id", "terms", "mode")
+    runs = {}
+    for name, reg in (("residual", residual), ("bare", bare)):
+        runs[name] = (
+            sorted(map(tuple, search.percolate_counts(reg, docs).collect())),
+            sorted(map(tuple, search.percolate_counts(
+                reg, docs, chunk_size=2).collect())),
+            sorted(map(tuple, search.percolate_topk(reg, docs, k=2).collect())),
+            sorted(map(tuple, search.percolate_many(reg, docs).collect())),
+        )
+    assert runs["residual"] == runs["bare"]
+    assert all(len(r) > 0 for r in runs["bare"])
+
+
 def _dsl_fixture(spark):
     """Five-clause rule fixture for the r12 grammar extension
     (must_not / exists / prefix on top of term+range+phrase)."""
