@@ -24,11 +24,11 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from bigdatasearchpro_spark.operators import search, transform
 from bigdatasearchpro_spark.sinks import ddl
-from bigdatasearchpro_spark.sinks.bulk import bulk_index_table
+from bigdatasearchpro_spark.sinks.bulk import bulk_index_table, content_written
 
 
 def bulk_data_to_index(
@@ -79,7 +79,7 @@ def create_index(spark: SparkSession, index_name: str) -> str:
 def delete_index(spark: SparkSession, index_name: str) -> None:
     """``/deleteIndex/{indexName}``."""
     ddl.delete_index(spark, index_name)
-    _invalidate_knn_indexes(index_name)
+    content_written(index_name)
 
 
 def get_all_index(spark: SparkSession) -> list[str]:
@@ -132,16 +132,11 @@ def resolve_index(spark: SparkSession, index_name: str) -> DataFrame:
 def routing_meta(spark: SparkSession, index_name: str) -> "dict | None":
     """The index's custom-routing metadata ``{col, shards}`` recorded
     at bulk-write time, or None for an unrouted index."""
-    import json as _json
-
     name = transform.normalize_index_name(index_name)
     try:
-        for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect():
-            if r["key"] == "bdsp.routing":
-                return _json.loads(r["value"])
+        return ddl.routing_spec(ddl.index_props(spark, name))
     except Exception:
         return None
-    return None
 
 
 def apply_routing(spark: SparkSession, index_name: str, docs: DataFrame,
@@ -743,23 +738,15 @@ def reindex(
 
     Returns ``{"created": n, "source": ..., "dest": ...}`` (the ES
     response's count field)."""
-    from bigdatasearchpro_spark.operators.querystring import query_string_filter
-
-    docs = spark.table(transform.normalize_index_name(source_index))
+    docs = (
+        _match(spark, source_index, query, text_col)[0] if query
+        else spark.table(transform.normalize_index_name(source_index))
+    )
     # a ROUTED source's __shard is a DERIVED partition column, not
     # document payload — ES _reindex doesn't copy _routing either;
     # leaking it would pollute the dest schema with stale shard ids
     if "__shard" in docs.columns:
         docs = docs.drop("__shard")
-    if query:
-        fields = (
-            [text_col]
-            if isinstance(text_col, str)
-            else list(text_col)
-            if text_col is not None
-            else search.all_string_cols(docs)
-        )
-        docs = query_string_filter(docs, query, default_field=fields, fields=fields)
     if pipeline is not None:
         from bigdatasearchpro_spark.operators.ingest import apply_pipeline
 
@@ -853,49 +840,17 @@ def force_merge(
     no atomic table swap); run it from a maintenance window, as ES
     itself recommends for force-merge. The failure path is recoverable:
     the target is validated as a real index up front (an alias view
-    would otherwise be copied and then fail at DROP TABLE), table
-    properties are carried onto the staged copy BEFORE the swap, and a
-    rename failure after the drop restores the original name from the
-    staged table — data is never dropped before a complete copy
-    exists, so no failure mode loses the index."""
-    import uuid
-
-    from bigdatasearchpro_spark.sinks.ddl import is_index_table, mark_index_table
-
+    would otherwise be copied and then fail at DROP TABLE), and the
+    swap is :func:`_staged_rewrite`'s — properties carried onto the
+    staged copy BEFORE the swap, a routed index's ``__shard``
+    partitions kept — so no failure mode loses the index (per
+    routed partition directory, at most ``max_num_segments`` files)."""
     n = transform.normalize_index_name(index_name)
-    if not is_index_table(spark, n):
+    if not ddl.is_index_table(spark, n):
         raise ValueError(f"force_merge target is not an index: {index_name!r}")
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {n}").collect()
-        if not r["key"].startswith("transient")
-    }
-    staged = f"{n}__fm_{uuid.uuid4().hex[:8]}"
-    df = spark.table(n).coalesce(max(int(max_num_segments), 1))
-    df.write.mode("errorifexists").option(
-        "parquet.enable.dictionary", "false"
-    ).saveAsTable(staged)
-    try:
-        rows = spark.table(staged).count()
-        for k, v in props.items():  # original properties survive the swap
-            kq = k.replace("'", "''")
-            vq = str(v).replace("'", "''")
-            spark.sql(
-                f"ALTER TABLE {staged} SET TBLPROPERTIES ('{kq}' = '{vq}')"
-            )
-    except Exception:
-        spark.sql(f"DROP TABLE IF EXISTS {staged}")  # no leak on prep failure
-        raise
-    spark.sql(f"DROP TABLE {n}")
-    try:
-        spark.sql(f"ALTER TABLE {staged} RENAME TO {n}")
-    except Exception as e:
-        raise RuntimeError(
-            f"force_merge swap interrupted: index {n!r} is dropped but its "
-            f"complete compacted copy is staged as {staged!r} — rename it "
-            f"back manually (ALTER TABLE {staged} RENAME TO {n})"
-        ) from e
-    mark_index_table(spark, n)
+    _staged_rewrite(spark, n,
+                    spark.table(n).coalesce(max(int(max_num_segments), 1)))
+    rows = spark.table(n).count()
     return {"index": n, "rows": rows, "segments": int(max_num_segments)}
 
 
@@ -915,13 +870,9 @@ def snapshot_index(spark: SparkSession, index_name: str, repo_dir: str) -> dict:
     import os
 
     from bigdatasearchpro_spark.sinks.bulk import bulk_index_parquet
-    from bigdatasearchpro_spark.sinks.ddl import (
-        ANALYZER_PROP_PREFIX,
-        is_index_table,
-    )
 
     n = transform.normalize_index_name(index_name)
-    if not is_index_table(spark, n):
+    if not ddl.is_index_table(spark, n):
         # ES resolves alias snapshot targets to their CONCRETE indices
         # and snapshots those (full content + settings, under their
         # own names) — snapshotting the alias VIEW would silently
@@ -936,12 +887,9 @@ def snapshot_index(spark: SparkSession, index_name: str, repo_dir: str) -> dict:
                              for t in targets]}
     path = os.path.join(repo_dir, n)
     df = spark.table(n)
-    meta = routing_meta(spark, index_name)
-    settings = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {n}").collect()
-        if r["key"].startswith(ANALYZER_PROP_PREFIX) or r["key"] == "shards"
-    }
+    props = ddl.index_props(spark, n)
+    meta = ddl.routing_spec(props)
+    settings = ddl.data_settings(props)
     if "__shard" in df.columns:
         df = df.drop("__shard")
     rows = bulk_index_parquet(df, path, mode="overwrite")
@@ -996,31 +944,23 @@ def restore_index(
     # prop added after the snapshot was taken would otherwise survive
     # the restore and the "restored" index would silently search with
     # the wrong analysis (r9 high review find).
-    from bigdatasearchpro_spark.sinks.ddl import ANALYZER_PROP_PREFIX
-
     settings = {}
     spath = os.path.join(path, "_bdsp_settings.json")
     if os.path.exists(spath):
         with open(spath, encoding="utf-8") as f:
             settings = _json.load(f)
-    for r in spark.sql(f"SHOW TBLPROPERTIES {dst}").collect():
-        if r["key"].startswith(ANALYZER_PROP_PREFIX) and \
-                r["key"] not in settings:
-            kq = r["key"].replace("'", "''")
-            spark.sql(
-                f"ALTER TABLE {dst} UNSET TBLPROPERTIES ('{kq}')")
-    for k, v in settings.items():
-        kq, vq = k.replace("'", "''"), str(v).replace("'", "''")
-        spark.sql(
-            f"ALTER TABLE {dst} SET TBLPROPERTIES ('{kq}' = '{vq}')"
-        )
+    ddl.unset_index_props(spark, dst, [
+        k for k in ddl.index_props(spark, dst)
+        if k.startswith(ddl.ANALYZER_PROP_PREFIX) and k not in settings])
+    ddl.set_index_props(spark, dst, settings)
     return {"index": dst, "rows": rows}
 
 
 def _staged_rewrite(spark: SparkSession, index: str, df: DataFrame) -> None:
-    """Swap an index's content for ``df`` via the force-merge publish
-    protocol: complete staged copy first, then drop + rename, original
-    properties carried over. Shared by the by-query write endpoints.
+    """Swap an index's content for ``df`` — the one publish protocol:
+    complete staged copy first, then drop + rename, original
+    properties carried over, then :data:`ON_CONTENT_WRITE` fires.
+    Shared by force-merge, the by-query writes and the mixed bulk.
 
     ROUTED indices (``bdsp.routing`` property) keep their contract
     through the rewrite: ``__shard`` is RECOMPUTED from the routing
@@ -1030,45 +970,30 @@ def _staged_rewrite(spark: SparkSession, index: str, df: DataFrame) -> None:
     — without this the rewrite silently kept the column but dropped
     the directory layout, turning every routed search's partition
     pruning into a full scan at scale."""
-    import json as _json
     import uuid
 
     from pyspark.sql import functions as F
 
-    from bigdatasearchpro_spark.sinks.ddl import mark_index_table
-
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {index}").collect()
-        if not r["key"].startswith("transient")
-    }
+    props = ddl.index_props(spark, index)
     staged = f"{index}__bq_{uuid.uuid4().hex[:8]}"
-    # `routed` marks that THIS write applied partitionBy('__shard') —
+    # `routed` marks that THIS write applies partitionBy('__shard') —
     # the MSCK below keys off it, NOT off `'__shard' in df.columns`:
     # an input frame may carry a (stale) __shard column while the
     # routed branch doesn't fire (no bdsp.routing property, or the
     # routing column absent), and MSCK on a non-partitioned table
     # throws AFTER the swap already happened (ADVICE r8).
-    routed = False
-    writer = None
-    if "bdsp.routing" in props:
-        meta = _json.loads(props["bdsp.routing"])
-        if meta.get("col") in df.columns:
-            df = df.withColumn(
-                "__shard",
-                F.pmod(F.xxhash64(F.col(meta["col"])),
-                       F.lit(int(meta["shards"]))),
-            )
-            writer = df.write.mode("errorifexists").partitionBy("__shard")
-            routed = True
-    if writer is None:
-        writer = df.write.mode("errorifexists")
+    meta = ddl.routing_spec(props)
+    routed = meta is not None and meta.get("col") in df.columns
+    if routed:
+        df = df.withColumn(
+            "__shard", ddl.routing_shard_expr(F.col(meta["col"]), meta["shards"])
+        )
+    writer = df.write.mode("errorifexists")
+    if routed:
+        writer = writer.partitionBy("__shard")
     writer.saveAsTable(staged)
     try:
-        for k, v in props.items():
-            kq = k.replace("'", "''")
-            vq = str(v).replace("'", "''")
-            spark.sql(f"ALTER TABLE {staged} SET TBLPROPERTIES ('{kq}' = '{vq}')")
+        ddl.set_index_props(spark, staged, props)
     except Exception:
         spark.sql(f"DROP TABLE IF EXISTS {staged}")
         raise
@@ -1077,7 +1002,7 @@ def _staged_rewrite(spark: SparkSession, index: str, df: DataFrame) -> None:
         spark.sql(f"ALTER TABLE {staged} RENAME TO {index}")
     except Exception as e:
         raise RuntimeError(
-            f"by-query swap interrupted: index {index!r} is dropped but its "
+            f"index swap interrupted: index {index!r} is dropped but its "
             f"complete rewritten copy is staged as {staged!r} — rename it "
             f"back manually (ALTER TABLE {staged} RENAME TO {index})"
         ) from e
@@ -1086,10 +1011,8 @@ def _staged_rewrite(spark: SparkSession, index: str, df: DataFrame) -> None:
         # catalog's partition entries still point at the staged path —
         # without recovery a partitioned table reads EMPTY
         spark.sql(f"MSCK REPAIR TABLE {index}")
-    mark_index_table(spark, index)
-    # content changed: any materialized ANN layout for this index is
-    # now stale (would serve deleted vectors) — drop it
-    _invalidate_knn_indexes(index)
+    ddl.mark_index_table(spark, index)
+    content_written(index)
 
 
 def _routing_shard(spark: SparkSession, index_name: str, routing) -> int:
@@ -1118,8 +1041,8 @@ def _routing_shard(spark: SparkSession, index_name: str, routing) -> int:
             # try_cast: ANSI mode makes a plain cast THROW on
             # malformed input; NULL lets us raise the typed error below
             F.lit(routing).try_cast(dtype).alias("v"),
-            F.pmod(F.xxhash64(F.lit(routing).try_cast(dtype)),
-                   F.lit(meta["shards"])).alias("shard"),
+            ddl.routing_shard_expr(F.lit(routing).try_cast(dtype),
+                                   meta["shards"]).alias("shard"),
         )
         .first()
     )
@@ -1172,9 +1095,30 @@ def _overwrite_shard(spark: SparkSession, index: str, shard: int,
             f"re-run INSERT OVERWRITE from it to recover"
         ) from e
     spark.sql(f"DROP TABLE {staged}")
-    # content changed: stale ANN layouts would serve deleted vectors
-    _invalidate_knn_indexes(index)
+    content_written(index)
     return n_kept
+
+
+def _query_rows(
+    spark: SparkSession, index: str, query: str,
+    text_col: "str | list[str] | None",
+) -> "tuple[DataFrame, Column]":
+    """``(docs, pred)`` for a by-query write: ``pred`` selects exactly
+    the rows ``_search?q=`` / ``_count?q=`` match on ``index`` — the
+    same field resolution, mapped analyzers, fuzzy vocabulary and
+    dotted paths as :func:`_match` — with NULL read as no match."""
+    from pyspark.sql import functions as F
+
+    from bigdatasearchpro_spark.operators.querystring import (
+        query_string_predicate,
+    )
+
+    docs, _, fields, mapping, analyzer = _resolve(spark, index, text_col)
+    pred = query_string_predicate(
+        docs, query, default_field=fields, fields=fields,
+        analyzer=analyzer, field_analyzers=mapping,
+    )
+    return docs, F.coalesce(pred, F.lit(False))
 
 
 def delete_by_query(
@@ -1196,36 +1140,17 @@ def delete_by_query(
     unrouted path, rewrites ONLY that shard's partition directory
     (static-partition INSERT OVERWRITE): at 100 TB a routed delete
     moves 1/n_shards of the index, not all of it."""
-    from bigdatasearchpro_spark.operators.querystring import (
-        compile_predicate,
-        dotted_path_resolver,
-        parse_query_string,
-    )
     from pyspark.sql import functions as F
 
     n = transform.normalize_index_name(index_name)
-    from bigdatasearchpro_spark.sinks.ddl import is_index_table
-
-    if not is_index_table(spark, n):
+    if not ddl.is_index_table(spark, n):
         raise ValueError(f"delete_by_query target is not an index: {index_name!r}")
-    docs = spark.table(n)
-    fields = (
-        [text_col]
-        if isinstance(text_col, str)
-        else list(text_col)
-        if text_col is not None
-        else search.all_string_cols(docs)
-    )
-    node = parse_query_string(query)
-    pred = compile_predicate(
-        node, default_cols=fields, valid_fields=fields,
-        nested_resolver=dotted_path_resolver(docs),
-    )
+    docs, pred = _query_rows(spark, n, query, text_col)
     if routing is not None:
         shard = _routing_shard(spark, n, routing)
         scope = docs.filter(F.col("__shard") == F.lit(shard))
         total = scope.count()
-        kept = scope.filter(~F.coalesce(pred, F.lit(False)))
+        kept = scope.filter(~pred)
         n_kept = _overwrite_shard(spark, n, shard, kept)
         # deleted comes from the shard-scoped numbers already in hand
         # (no post-write rescan of the shard); the single full count
@@ -1234,7 +1159,7 @@ def delete_by_query(
         remaining = spark.table(n).count()
         return {"deleted": deleted, "remaining": remaining}
     total = docs.count()
-    kept = docs.filter(~F.coalesce(pred, F.lit(False)))
+    kept = docs.filter(~pred)
     _staged_rewrite(spark, n, kept)
     remaining = spark.table(n).count()
     return {"deleted": total - remaining, "remaining": remaining}
@@ -1263,17 +1188,10 @@ def update_by_query(
     updated through the routed path (the rewritten rows must stay in
     the shard being overwritten; a routing-key rewrite is a cross-
     shard MOVE — use the unrouted path, which re-shards)."""
-    from bigdatasearchpro_spark.operators.querystring import (
-        compile_predicate,
-        dotted_path_resolver,
-        parse_query_string,
-    )
     from pyspark.sql import functions as F
 
     n = transform.normalize_index_name(index_name)
-    from bigdatasearchpro_spark.sinks.ddl import is_index_table
-
-    if not is_index_table(spark, n):
+    if not ddl.is_index_table(spark, n):
         raise ValueError(f"update_by_query target is not an index: {index_name!r}")
     docs = spark.table(n)
     unknown = set(set_exprs) - set(docs.columns)
@@ -1282,21 +1200,7 @@ def update_by_query(
     if query is None:
         pred = F.lit(True)
     else:
-        fields = (
-            [text_col]
-            if isinstance(text_col, str)
-            else list(text_col)
-            if text_col is not None
-            else search.all_string_cols(docs)
-        )
-        node = parse_query_string(query)
-        pred = F.coalesce(
-            compile_predicate(
-                node, default_cols=fields, valid_fields=fields,
-                nested_resolver=dotted_path_resolver(docs),
-            ),
-            F.lit(False),
-        )
+        docs, pred = _query_rows(spark, n, query, text_col)
     if routing is not None:
         meta = routing_meta(spark, n)
         if meta is not None and meta.get("col") in set_exprs:
@@ -1356,10 +1260,9 @@ def bulk_mixed(
     from pyspark.sql import functions as F
 
     from bigdatasearchpro_spark.sinks.bulk import apply_bulk_actions
-    from bigdatasearchpro_spark.sinks.ddl import is_index_table
 
     n = transform.normalize_index_name(index_name)
-    if not is_index_table(spark, n):
+    if not ddl.is_index_table(spark, n):
         raise ValueError(f"bulk_mixed target is not an index: {index_name!r}")
     base = spark.table(n)
     # routed indices: the shard column is DERIVED, never part of the
@@ -1391,20 +1294,13 @@ def cat_indices(spark: SparkSession) -> DataFrame:
     watched the same numbers in Kibana, README.md:12, 809). Counts are
     parquet-metadata reads per index — catalog-sized work, never a
     corpus scan."""
-    from bigdatasearchpro_spark.sinks import ddl
-
-    from bigdatasearchpro_spark.sinks.ddl import DEFAULT_SHARDS
-
     rows = []
     for r in ddl.list_indices(spark).collect():
         name = r["index_name"]
         # every ES index has a shard count; indices created through the
         # bulk path without explicit settings carry the default (the
         # reference's 5, BulkProcessImpl.java:66)
-        shards = DEFAULT_SHARDS
-        for p in spark.sql(f"SHOW TBLPROPERTIES {name}").collect():
-            if p["key"] == "shards":
-                shards = int(p["value"])
+        shards = ddl.shard_count(ddl.index_props(spark, name))
         rows.append((name, spark.table(name).count(), shards))
     return spark.createDataFrame(
         rows, "index_name string, docs_count long, shards int"
@@ -1421,9 +1317,6 @@ def cluster_health(spark: SparkSession) -> dict:
     no replicas, so ES's yellow — unassigned replicas — cannot
     occur).  Shard counts are catalog/metadata reads, never a corpus
     scan."""
-    from bigdatasearchpro_spark.sinks import ddl
-    from bigdatasearchpro_spark.sinks.ddl import DEFAULT_SHARDS
-
     n_indices = 0
     shards = 0
     failed = 0
@@ -1432,12 +1325,7 @@ def cluster_health(spark: SparkSession) -> dict:
         name = r["index_name"]
         try:
             spark.table(name)
-            meta = routing_meta(spark, name)
-            s = int(meta["shards"]) if meta else DEFAULT_SHARDS
-            for p in spark.sql(f"SHOW TBLPROPERTIES {name}").collect():
-                if p["key"] == "shards":
-                    s = int(p["value"])
-            shards += s
+            shards += ddl.shard_count(ddl.index_props(spark, name))
         except Exception:
             failed += 1
     return {
@@ -1467,9 +1355,6 @@ def cat_shards(spark: SparkSession,
     ``(index_name, shard, prirep, state, docs)``."""
     from pyspark.sql import functions as F
 
-    from bigdatasearchpro_spark.sinks import ddl
-    from bigdatasearchpro_spark.sinks.ddl import DEFAULT_SHARDS
-
     names = (
         [transform.normalize_index_name(index_name)]
         if index_name is not None
@@ -1478,12 +1363,9 @@ def cat_shards(spark: SparkSession,
     rows: list[tuple] = []
     for name in names:
         docs = spark.table(name)
-        meta = routing_meta(spark, name)
-        shards = int(meta["shards"]) if meta else DEFAULT_SHARDS
-        for p in spark.sql(f"SHOW TBLPROPERTIES {name}").collect():
-            if p["key"] == "shards":
-                shards = int(p["value"])
-        counts: dict[int, int] = dict.fromkeys(range(shards), 0)
+        props = ddl.index_props(spark, name)
+        meta = ddl.routing_spec(props)
+        counts: dict[int, int] = dict.fromkeys(range(ddl.shard_count(props)), 0)
         if meta is not None and "__shard" in docs.columns:
             for r in docs.groupBy("__shard").agg(
                 F.count(F.lit(1)).alias("n")
@@ -1608,28 +1490,17 @@ def update_settings(spark: SparkSession, index_name: str, settings: dict) -> dic
     dynamic settings are updated through this endpoint). Keys are
     namespaced verbatim; values stringified, like ES."""
     n = transform.normalize_index_name(index_name)
-    from bigdatasearchpro_spark.sinks.ddl import is_index_table
-
-    if not is_index_table(spark, n):
+    if not ddl.is_index_table(spark, n):
         raise ValueError(f"update_settings target is not an index: {index_name!r}")
-    for k, v in settings.items():
-        kq = str(k).replace("'", "''")
-        vq = str(v).replace("'", "''")
-        spark.sql(f"ALTER TABLE {n} SET TBLPROPERTIES ('{kq}' = '{vq}')")
+    ddl.set_index_props(spark, n, settings)
     return get_settings(spark, n)
 
 
 def get_settings(spark: SparkSession, index_name: str) -> dict:
     """ES ``GET _settings`` — the index's recorded settings (table
     properties, engine markers filtered out)."""
-    n = transform.normalize_index_name(index_name)
-    from bigdatasearchpro_spark.sinks.ddl import INDEX_MARKER
-
-    return {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {n}").collect()
-        if r["key"] != INDEX_MARKER and not r["key"].startswith("transient")
-    }
+    props = ddl.index_props(spark, transform.normalize_index_name(index_name))
+    return {k: v for k, v in props.items() if k != ddl.INDEX_MARKER}
 
 
 def rollover(
@@ -1650,16 +1521,10 @@ def rollover(
 
     The alias must resolve to exactly ONE index. Returns the ES-shaped
     ``{"old_index", "new_index", "rolled_over", "conditions"}``."""
-    from bigdatasearchpro_spark.sinks.ddl import (
-        add_alias,
-        is_index_table,
-        list_aliases,
-    )
-
     a = transform.normalize_index_name(alias)
     targets = [
         r["index_name"]
-        for r in list_aliases(spark).collect()
+        for r in ddl.list_aliases(spark).collect()
         if r["alias"] == a
     ]
     if len(targets) != 1:
@@ -1668,7 +1533,7 @@ def rollover(
             f"(has {targets})"
         )
     old = targets[0]
-    if not is_index_table(spark, old):
+    if not ddl.is_index_table(spark, old):
         raise ValueError(f"rollover target is not an index: {old!r}")
     n_docs = spark.table(old).count()
     met = {"max_docs": max_docs is not None and n_docs >= max_docs}
@@ -1684,10 +1549,8 @@ def rollover(
             f"{f.name} {f.dataType.simpleString()}"
             for f in spark.table(old).schema.fields
         )
-        from bigdatasearchpro_spark.sinks.ddl import create_index
-
-        create_index(spark, new, schema_ddl)
-        add_alias(spark, new, a)  # re-point: writers keep using the alias
+        ddl.create_index(spark, new, schema_ddl)
+        ddl.add_alias(spark, new, a)  # re-point: writers keep using the alias
     return {
         "old_index": old,
         "new_index": new,
@@ -1930,7 +1793,6 @@ def put_knn_index(
     import uuid as _uuid
 
     from bigdatasearchpro_spark.operators import similarity
-    from bigdatasearchpro_spark.sinks.ddl import is_index_table
 
     n = transform.normalize_index_name(index_name)
     # a CONCRETE index only, never an alias view: the layout registry
@@ -1939,7 +1801,7 @@ def put_knn_index(
     # invalidated when the underlying index's content changes and
     # would serve deleted vectors forever (ES likewise puts
     # dense_vector mappings on the index, not the alias)
-    if not is_index_table(spark, n):
+    if not ddl.is_index_table(spark, n):
         raise ValueError(
             f"put_knn_index target is not an index: {index_name!r} "
             "(aliases resolve at search time; build the ANN layout on "
@@ -2832,12 +2694,10 @@ def execute_slm_policy(spark: SparkSession, policy_id: str) -> dict:
     import os as _os
     import shutil as _shutil
 
-    from bigdatasearchpro_spark.sinks.ddl import list_indices
-
     p = _SLM_POLICIES.get(policy_id)
     if p is None:
         raise ValueError(f"no slm policy {policy_id!r}")
-    live = [r["index_name"] for r in list_indices(spark).collect()]
+    live = [r["index_name"] for r in ddl.list_indices(spark).collect()]
     matched = sorted({
         n for n in live
         for pat in p["indices"] if _fnmatch.fnmatch(n, pat)
@@ -3001,9 +2861,7 @@ def submit_async_search(
                 f"index has {total} routed shards; n_shards must match"
             )
     else:
-        from bigdatasearchpro_spark.sinks.ddl import DEFAULT_SHARDS
-
-        total = int(n_shards or DEFAULT_SHARDS)
+        total = int(n_shards or ddl.DEFAULT_SHARDS)
     sid = _uuid.uuid4().hex[:16]
     _ASYNC_SEARCHES[sid] = {
         "index": index_name,

@@ -535,6 +535,30 @@ def query_string_filter(
     match instead of any one (0/1 = plain OR). Compiles to a
     per-clause indicator sum >= m — still one narrow predicate.
     """
+    from bigdatasearchpro_spark.sources.files import fan_out
+
+    return fan_out(docs).filter(query_string_predicate(
+        docs, q, default_field=default_field, fields=fields,
+        minimum_should_match=minimum_should_match, analyzer=analyzer,
+        field_analyzers=field_analyzers,
+    ))
+
+
+def query_string_predicate(
+    docs: DataFrame,
+    q: str,
+    *,
+    default_field: "str | Sequence[str] | None" = None,
+    fields: Optional[Sequence[str]] = None,
+    minimum_should_match: int = 0,
+    analyzer: str = "standard",
+    field_analyzers: "dict[str, str] | None" = None,
+) -> Column:
+    """The one boolean Column :func:`query_string_filter` filters with
+    (same arguments): fuzzy clauses expand against ``docs``'
+    vocabulary, dotted paths resolve against its schema.  The
+    ``_delete_by_query`` / ``_update_by_query`` writes select their
+    rows with it, so they act on exactly what ``_search?q=`` finds."""
     valid = list(fields) if fields is not None else all_string_cols(docs)
     if default_field is None:
         default = valid
@@ -563,16 +587,12 @@ def query_string_filter(
             ).otherwise(0)
             for c in node.children
         ]
-        pred = sum(indicators[1:], indicators[0]) >= F.lit(minimum_should_match)
-    else:
-        pred = compile_predicate(
-            node, default_cols=default, valid_fields=valid,
-            fuzzy_resolver=resolver, nested_resolver=nested,
-            analyzer=analyzer, field_analyzers=field_analyzers,
-        )
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    return fan_out(docs).filter(pred)
+        return sum(indicators[1:], indicators[0]) >= F.lit(minimum_should_match)
+    return compile_predicate(
+        node, default_cols=default, valid_fields=valid,
+        fuzzy_resolver=resolver, nested_resolver=nested,
+        analyzer=analyzer, field_analyzers=field_analyzers,
+    )
 
 
 def weighted_terms(node, analyzer: str = "standard") -> list[tuple[str, float]]:

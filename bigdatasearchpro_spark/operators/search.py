@@ -54,7 +54,6 @@ from __future__ import annotations
 
 import math
 import operator
-import re
 from contextlib import contextmanager
 from functools import reduce
 from typing import Sequence

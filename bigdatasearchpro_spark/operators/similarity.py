@@ -1312,6 +1312,9 @@ def maxsim_topk(
     the same operands; the DuckDB oracle replays them exactly).
     Rows shorter than the query dim score NULL (the expression form's
     ``try_element_at`` null-poisoning), longer rows ignore the tail.
+    A row with a NaN or ±inf component also scores NULL: a NULL
+    component arrives as NaN, and neither NaN nor ±inf has a place on
+    the int64 grid (``floor(inf*grid)`` has no integer value).
     TakeOrdered closes the page."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -1332,10 +1335,9 @@ def maxsim_topk(
         lens = [len(v) if v is not None else -1 for v in vals]
         if min(lens) == max(lens) == d:
             fm = np.asarray(vals, dtype=np.float64)
-            # a NULL component arrives as NaN; astype(int64) on NaN is
-            # UNDEFINED (typically INT64_MIN), while the expression
-            # form this replaced null-poisons the score — mask
-            # non-finite rows to NULL to keep those semantics
+            # a NULL component arrives as NaN; astype(int64) on NaN or
+            # ±inf is UNDEFINED (typically INT64_MIN), so a row with a
+            # non-finite component scores NULL (see the docstring)
             bad = ~np.isfinite(fm).all(axis=1)
             m = np.floor(
                 np.where(np.isfinite(fm), fm, 0.0) * g + 0.5

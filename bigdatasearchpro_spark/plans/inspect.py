@@ -145,7 +145,7 @@ def unbounded_global_windows(df: DataFrame) -> list[str]:
     empty-partition-spec subtree reaches a scan with no bounding node
     in between IS returned (its one-line description), and the
     test_plans gate fails on it.  This is the machine check that lets
-    bench mute the per-query warning flood (bench.py) without a real
+    a harness mute Spark's per-query warning flood without a real
     unbounded window being able to hide in it."""
     def _bounded(node) -> bool:
         # bounded along EVERY path to a leaf: a bounding node caps its

@@ -28,14 +28,24 @@ from pyspark.sql import DataFrame
 
 from bigdatasearchpro_spark.operators.transform import normalize_index_name
 
-# Observers fired after bulk_index_table replaces/extends an index's
-# content, with the NORMALIZED index name.  api.py registers the
-# materialized-ANN-layout invalidator here so EVERY content write path
-# (bulk, reindex, restore, transform dest, resize) drops stale IVF
-# layouts — per-call-site invalidation missed four of those five
-# (the ADVICE r8 finding: ann search served deleted vectors after a
-# re-bulk).  sinks/ must not import api (cycle), hence the hook.
+# Observers fired after an index's content is replaced, extended or
+# dropped, with the NORMALIZED index name: every bulk_index_table write
+# (bulk, reindex, restore, transform dest, resize), every staged
+# rewrite (force-merge, by-query writes, mixed bulk), a routed shard
+# overwrite and an index delete.  api.py registers the
+# materialized-ANN-layout invalidator here, so no write path can leave
+# a stale IVF layout behind (per-call-site invalidation missed four of
+# five paths: ann search served deleted vectors after a re-bulk).
+# Per-index state keyed by content belongs here too.  sinks/ must not
+# import api (cycle), hence the hook.
 ON_CONTENT_WRITE: "list[Callable[[str], None]]" = []
+
+
+def content_written(name: str) -> None:
+    """Fire :data:`ON_CONTENT_WRITE` for index ``name``."""
+    nn = normalize_index_name(name)
+    for hook in ON_CONTENT_WRITE:
+        hook(nn)
 
 
 def bulk_index_parquet(
@@ -134,6 +144,7 @@ def bulk_index_table(
     from pyspark.sql import functions as F
 
     from bigdatasearchpro_spark.operators.dedup import dedup_last_write_wins
+    from bigdatasearchpro_spark.sinks import ddl
 
     if id_col is not None:
         df = dedup_last_write_wins(df, id_col, order_by or [], keep="last")
@@ -142,22 +153,19 @@ def bulk_index_table(
     # inflate the result with pre-existing rows.
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows_written"))
-    # stringified index payloads are high-cardinality: dictionary
-    # encoding costs ~2.7x write wall for these (see bulk_index_parquet)
-    writer = df.write.mode(mode).option("parquet.enable.dictionary", "false")
     if routing_col is not None:
         if routing_col not in df.columns:
             raise ValueError(f"routing column {routing_col!r} not in frame")
         if n_shards < 1:
             raise ValueError("n_shards must be >= 1")
         df = df.withColumn(
-            "__shard", F.pmod(F.xxhash64(F.col(routing_col)), F.lit(n_shards))
+            "__shard", ddl.routing_shard_expr(F.col(routing_col), n_shards)
         )
-        writer = (
-            df.write.mode(mode)
-            .option("parquet.enable.dictionary", "false")
-            .partitionBy("__shard")
-        )
+    # stringified index payloads are high-cardinality: dictionary
+    # encoding costs ~2.7x write wall for these (see bulk_index_parquet)
+    writer = df.write.mode(mode).option("parquet.enable.dictionary", "false")
+    if routing_col is not None:
+        writer = writer.partitionBy("__shard")
     # a bulk of DOCUMENTS into an existing index must not erase its
     # mappings/settings (ES never touches them on document writes) —
     # but saveAsTable overwrite drops + recreates the table, losing
@@ -165,12 +173,6 @@ def bulk_index_table(
     # analyzers, the shards setting) and re-apply after the write;
     # bdsp.routing is NOT preserved — it describes the physical layout
     # this very write determines.
-    from bigdatasearchpro_spark.sinks.ddl import (
-        ANALYZER_PROP_PREFIX,
-        is_index_table,
-        mark_index_table,
-    )
-
     spark = df.sparkSession
     nn = normalize_index_name(name)
     keep: "dict[str, str]" = {}
@@ -178,32 +180,21 @@ def bulk_index_table(
     # target would throw (caught) but still log an ERROR through the
     # execution-listener bus on every fresh bulk
     if (mode == "overwrite" and spark.catalog.tableExists(nn)
-            and is_index_table(spark, nn)):
-        for r in spark.sql(f"SHOW TBLPROPERTIES {nn}").collect():
-            if r["key"].startswith(ANALYZER_PROP_PREFIX) or r["key"] == "shards":
-                keep[r["key"]] = r["value"]
+            and ddl.is_index_table(spark, nn)):
+        keep = ddl.data_settings(ddl.index_props(spark, nn))
     writer.saveAsTable(nn)
     # stamp the table as an index so list_indices / `_all` search see it
     # (the catalog also holds non-index tables and temp views, which ES
     # would never list — sinks/ddl.py INDEX_MARKER)
-    mark_index_table(spark, name)
-    for k, v in keep.items():
-        kq, vq = k.replace("'", "''"), v.replace("'", "''")
-        spark.sql(
-            f"ALTER TABLE {nn} SET TBLPROPERTIES ('{kq}' = '{vq}')"
-        )
+    ddl.mark_index_table(spark, name)
     if routing_col is not None:
         import json as _json
 
-        meta = _json.dumps(
+        keep[ddl.ROUTING_PROP] = _json.dumps(
             {"col": routing_col, "shards": int(n_shards)}, sort_keys=True
         )
-        df.sparkSession.sql(
-            f"ALTER TABLE {normalize_index_name(name)} SET TBLPROPERTIES "
-            f"('bdsp.routing' = '{meta}')"
-        )
-    for hook in ON_CONTENT_WRITE:
-        hook(nn)
+    ddl.set_index_props(spark, nn, keep)
+    content_written(nn)
     return int(obs.get["rows_written"])
 
 

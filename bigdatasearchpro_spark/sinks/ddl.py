@@ -10,7 +10,7 @@ write path (shard count -> partition count) rather than DDL state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdatasearchpro_spark.operators.transform import normalize_index_name
@@ -23,6 +23,87 @@ DEFAULT_SHARDS = 5  # reference: number_of_shards=5, BulkProcessImpl.java:66
 # (or let `_all` search scan). Durable (a table property, not session
 # state), so a restarted session still sees its indices.
 INDEX_MARKER = "bdsp.index"
+# custom-routing layout ``{"col", "shards"}`` (JSON), stamped by the
+# routed bulk write: the index is partitioned by ``__shard``
+ROUTING_PROP = "bdsp.routing"
+
+
+# --------------------------------------------------------------------------
+# Index metadata: every table-property read and write of an index goes
+# through these, so how an index's metadata is stored (properties, the
+# routing layout, the shard count) is known in one place.
+# --------------------------------------------------------------------------
+
+
+def _sql_str(v) -> str:
+    """``v`` as a SQL string literal that reads back verbatim: Spark's
+    literal parser unescapes backslashes and a doubled quote."""
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def index_props(spark: SparkSession, name: str) -> "dict[str, str]":
+    """Every property of a table or view (one ``SHOW TBLPROPERTIES``),
+    minus Spark's own ``transient*`` bookkeeping."""
+    return {
+        r["key"]: r["value"]
+        for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()
+        if not r["key"].startswith("transient")
+    }
+
+
+def set_index_props(spark: SparkSession, name: str, props: dict,
+                    *, kind: str = "TABLE") -> None:
+    """Write every ``key -> value`` of ``props`` (stringified) onto a
+    table (``kind="VIEW"`` for a view) in ONE ``ALTER … SET
+    TBLPROPERTIES`` statement."""
+    if props:
+        body = ", ".join(f"{_sql_str(k)} = {_sql_str(v)}"
+                         for k, v in props.items())
+        spark.sql(f"ALTER {kind} {name} SET TBLPROPERTIES ({body})")
+
+
+def unset_index_props(spark: SparkSession, name: str, keys,
+                      *, kind: str = "TABLE") -> None:
+    """Remove ``keys`` from a table's (or view's) properties in one
+    statement."""
+    keys = list(keys)
+    if keys:
+        body = ", ".join(_sql_str(k) for k in keys)
+        spark.sql(f"ALTER {kind} {name} UNSET TBLPROPERTIES ({body})")
+
+
+def routing_spec(props: "dict[str, str]") -> "dict | None":
+    """The routing layout ``{col, shards}`` recorded in an index's
+    properties, or None for an unrouted index."""
+    import json as _json
+
+    v = props.get(ROUTING_PROP)
+    return None if v is None else _json.loads(v)
+
+
+def shard_count(props: "dict[str, str]") -> int:
+    """An index's shard count: a routed index has its routing layout's
+    ``__shard`` partitions; an unrouted one reports its ``shards``
+    setting, else :data:`DEFAULT_SHARDS`."""
+    spec = routing_spec(props)
+    if spec is not None:
+        return int(spec["shards"])
+    return int(props.get("shards", DEFAULT_SHARDS))
+
+
+def data_settings(props: "dict[str, str]") -> "dict[str, str]":
+    """The data-independent settings a content write keeps and a
+    snapshot carries: per-field analyzers and the ``shards`` setting
+    (the routing layout is decided by the write itself)."""
+    return {k: v for k, v in props.items()
+            if k.startswith(ANALYZER_PROP_PREFIX) or k == "shards"}
+
+
+def routing_shard_expr(col: Column, n_shards) -> Column:
+    """The routing hash: the ``__shard`` a routing value lands in,
+    ``pmod(xxhash64(col), n_shards)``.  xxhash64 is type-sensitive, so
+    ``col`` must have the routing column's native type."""
+    return F.pmod(F.xxhash64(col), F.lit(int(n_shards)))
 
 
 def mark_index_table(spark: SparkSession, name: str) -> None:
@@ -32,29 +113,25 @@ def mark_index_table(spark: SparkSession, name: str) -> None:
     a bulk-loaded index, so matching index templates apply then —
     exactly when ES applies templates to auto-created indices."""
     n = normalize_index_name(name)
-    first_marking = not is_index_table(spark, n)
-    spark.sql(f"ALTER TABLE {n} SET TBLPROPERTIES ('{INDEX_MARKER}' = 'true')")
-    if first_marking:
-        tmpl_shards, tmpl_mappings = _merged_template(spark, n)
-        if tmpl_shards is not None:
-            spark.sql(
-                f"ALTER TABLE {n} SET TBLPROPERTIES "
-                f"('shards' = '{int(tmpl_shards)}')"
-            )
-        if tmpl_mappings:
-            _apply_template_mappings(spark, n, tmpl_mappings)
+    if is_index_table(spark, n):
+        return
+    tmpl_shards, tmpl_mappings = _merged_template(spark, n)
+    props = {INDEX_MARKER: "true"}
+    if tmpl_shards is not None:
+        props["shards"] = int(tmpl_shards)
+    set_index_props(spark, n, props)
+    if tmpl_mappings:
+        _apply_template_mappings(spark, n, tmpl_mappings)
 
 
 def is_index_table(spark: SparkSession, name: str) -> bool:
     """True iff ``name`` is a marked index table (not a temp view or an
     unmarked catalog table)."""
     try:
-        rows = spark.sql(
-            f"SHOW TBLPROPERTIES {normalize_index_name(name)} ('{INDEX_MARKER}')"
-        ).collect()
+        props = index_props(spark, normalize_index_name(name))
     except Exception:
         return False  # temp view / vanished table: not an index
-    return any(r["value"] == "true" for r in rows)
+    return props.get(INDEX_MARKER) == "true"
 
 
 def create_index(
@@ -154,17 +231,9 @@ ALIAS_FILTER_PROP = "bdsp.alias.filter"
 
 def _alias_prop(spark: SparkSession, view: str, prop: str) -> "str | None":
     try:
-        rows = spark.sql(
-            f"SHOW TBLPROPERTIES {view} ('{prop}')"
-        ).collect()
+        return index_props(spark, view).get(prop) or None
     except Exception:
         return None
-    if not rows:
-        return None
-    v = rows[0]["value"]
-    if not v or "does not have property" in v:
-        return None
-    return v
 
 
 def _remove_index_from_aliases(spark: SparkSession, index: str) -> None:
@@ -239,10 +308,9 @@ def add_alias(
                 ) from None
     where = f" WHERE {filter_sql}" if filter_sql else ""
     body = " UNION ALL ".join(f"SELECT * FROM {t}{where}" for t in targets)
-    props = f"'{ALIAS_MARKER}' = '{','.join(targets)}'"
+    props = f"{_sql_str(ALIAS_MARKER)} = {_sql_str(','.join(targets))}"
     if filter_sql is not None:
-        fq = filter_sql.replace("'", "''")
-        props += f", '{ALIAS_FILTER_PROP}' = '{fq}'"
+        props += f", {_sql_str(ALIAS_FILTER_PROP)} = {_sql_str(filter_sql)}"
     spark.sql(
         f"CREATE OR REPLACE VIEW {a} TBLPROPERTIES ({props}) AS {body}"
     )
@@ -267,16 +335,9 @@ def list_aliases(spark: SparkSession) -> DataFrame:
     for t in spark.catalog.listTables():
         if t.isTemporary or t.name.startswith(".") or t.name == "_all":
             continue
-        try:
-            rows = spark.sql(
-                f"SHOW TBLPROPERTIES {t.name} ('{ALIAS_MARKER}')"
-            ).collect()
-        except Exception:
-            continue
-        for r in rows:
-            v = r["value"]
-            if v and "does not have property" not in v:
-                edges.extend((t.name, ix) for ix in v.split(","))
+        v = _alias_prop(spark, t.name, ALIAS_MARKER)
+        if v is not None:
+            edges.extend((t.name, ix) for ix in v.split(","))
     return spark.createDataFrame(edges or [], "alias string, index_name string")
 
 
@@ -310,23 +371,18 @@ def put_mapping(
             raise ValueError(
                 f"unknown analyzer {an!r} (have {sorted(ANALYZERS)})"
             )
-    for field, an in analyzers.items():
-        spark.sql(
-            f"ALTER TABLE {n} SET TBLPROPERTIES "
-            f"('{ANALYZER_PROP_PREFIX}{field}' = '{an}')"
-        )
+    set_index_props(spark, n, {
+        f"{ANALYZER_PROP_PREFIX}{field}": an for field, an in analyzers.items()
+    })
     return get_mapping(spark, n)
 
 
 def get_mapping(spark: SparkSession, index_name: str) -> dict:
     """field -> analyzer for an index (ES ``GET _mapping``); fields
     without an explicit mapping are absent (they analyze standard)."""
-    n = normalize_index_name(index_name)
-    out = {}
-    for r in spark.sql(f"SHOW TBLPROPERTIES {n}").collect():
-        if r["key"].startswith(ANALYZER_PROP_PREFIX):
-            out[r["key"][len(ANALYZER_PROP_PREFIX):]] = r["value"]
-    return out
+    props = index_props(spark, normalize_index_name(index_name))
+    return {k[len(ANALYZER_PROP_PREFIX):]: v for k, v in props.items()
+            if k.startswith(ANALYZER_PROP_PREFIX)}
 
 
 # --------------------------------------------------------------------------
@@ -399,10 +455,8 @@ def put_template(
         sort_keys=True,
     )
     _ensure_template_store(spark)
-    spark.sql(
-        f"ALTER VIEW {TEMPLATE_STORE} SET TBLPROPERTIES "
-        f"('{_TEMPLATE_PROP_PREFIX}{name}' = '{payload}')"
-    )
+    set_index_props(spark, TEMPLATE_STORE,
+                    {f"{_TEMPLATE_PROP_PREFIX}{name}": payload}, kind="VIEW")
     return get_template(spark, name)
 
 
@@ -411,13 +465,9 @@ def _raw_templates(spark: SparkSession) -> "dict[str, dict]":
 
     if not spark.catalog.tableExists(TEMPLATE_STORE):
         return {}
-    out = {}
-    for r in spark.sql(f"SHOW TBLPROPERTIES {TEMPLATE_STORE}").collect():
-        if r["key"].startswith(_TEMPLATE_PROP_PREFIX):
-            out[r["key"][len(_TEMPLATE_PROP_PREFIX):]] = _json.loads(
-                r["value"]
-            )
-    return out
+    return {k[len(_TEMPLATE_PROP_PREFIX):]: _json.loads(v)
+            for k, v in index_props(spark, TEMPLATE_STORE).items()
+            if k.startswith(_TEMPLATE_PROP_PREFIX)}
 
 
 def get_template(spark: SparkSession, name: str) -> "dict | None":
@@ -436,10 +486,8 @@ def delete_template(spark: SparkSession, name: str) -> bool:
     """ES ``DELETE _template/{name}`` — True iff it existed."""
     if name not in _raw_templates(spark):
         return False
-    spark.sql(
-        f"ALTER VIEW {TEMPLATE_STORE} UNSET TBLPROPERTIES "
-        f"('{_TEMPLATE_PROP_PREFIX}{name}')"
-    )
+    unset_index_props(spark, TEMPLATE_STORE, [f"{_TEMPLATE_PROP_PREFIX}{name}"],
+                      kind="VIEW")
     return True
 
 
@@ -534,16 +582,11 @@ def put_script(spark: SparkSession, script_id: str, source: str,
         raise ValueError(f"unsupported script lang {lang!r}")
     payload = _json.dumps({"lang": lang, "source": source}, sort_keys=True)
     _ensure_template_store(spark)
-    # escape for the SQL string literal: painless sources carry single
-    # quotes (doc['field'] — '' unescapes back on read), and mustache
-    # sources carry double quotes, which json.dumps backslash-escapes —
-    # Spark's C-style literal parser would EAT those backslashes
-    # (\" -> ") and corrupt the stored JSON payload, so double them
-    quoted = payload.replace("\\", "\\\\").replace("'", "''")
-    spark.sql(
-        f"ALTER VIEW {TEMPLATE_STORE} SET TBLPROPERTIES "
-        f"('{_SCRIPT_PROP_PREFIX}{script_id}' = '{quoted}')"
-    )
+    # painless sources carry single quotes (doc['field']) and mustache
+    # sources double quotes, which json.dumps backslash-escapes: the
+    # literal escaping of set_index_props keeps both verbatim
+    set_index_props(spark, TEMPLATE_STORE,
+                    {f"{_SCRIPT_PROP_PREFIX}{script_id}": payload}, kind="VIEW")
     return get_script(spark, script_id)
 
 
@@ -552,11 +595,9 @@ def _raw_scripts(spark: SparkSession) -> "dict[str, dict]":
 
     if not spark.catalog.tableExists(TEMPLATE_STORE):
         return {}
-    out = {}
-    for r in spark.sql(f"SHOW TBLPROPERTIES {TEMPLATE_STORE}").collect():
-        if r["key"].startswith(_SCRIPT_PROP_PREFIX):
-            out[r["key"][len(_SCRIPT_PROP_PREFIX):]] = _json.loads(r["value"])
-    return out
+    return {k[len(_SCRIPT_PROP_PREFIX):]: _json.loads(v)
+            for k, v in index_props(spark, TEMPLATE_STORE).items()
+            if k.startswith(_SCRIPT_PROP_PREFIX)}
 
 
 def get_script(spark: SparkSession, script_id: str) -> "dict | None":
@@ -569,8 +610,6 @@ def delete_script(spark: SparkSession, script_id: str) -> bool:
     """ES ``DELETE _scripts/{id}`` — True iff it existed."""
     if script_id not in _raw_scripts(spark):
         return False
-    spark.sql(
-        f"ALTER VIEW {TEMPLATE_STORE} UNSET TBLPROPERTIES "
-        f"('{_SCRIPT_PROP_PREFIX}{script_id}')"
-    )
+    unset_index_props(spark, TEMPLATE_STORE, [f"{_SCRIPT_PROP_PREFIX}{script_id}"],
+                      kind="VIEW")
     return True

@@ -2233,3 +2233,82 @@ def test_routing_hash_uses_native_column_type(spark):
             api._routing_shard(spark, idx, "not-a-number")
     finally:
         api.delete_index(spark, idx)
+
+
+def _run_frame(spark):
+    """30 in-memory docs ``(doc_id, lang, text, views)``: odd ids say
+    "runs", even ids "run"; every third id also says "slow"."""
+    rows = [
+        (str(i), ("en", "de", "fr")[i % 3],
+         f"dogs {'runs' if i % 2 else 'run'} {'slow' if i % 3 == 0 else 'fast'}",
+         str(i * 10))
+        for i in range(30)
+    ]
+    return spark.createDataFrame(
+        rows, "doc_id string, lang string, text string, views string")
+
+
+def test_force_merge_keeps_routed_layout(spark):
+    """force_merge publishes through the one staged-rewrite protocol:
+    a routed index keeps its ``__shard`` partitions, and a routed
+    by-query write afterwards still finds its partition."""
+    import uuid
+
+    idx = f"fm_routed_{uuid.uuid4().hex[:8]}"
+    api.bulk_data_to_index(spark, _run_frame(spark), idx, id_col="doc_id",
+                           routing_col="lang", n_shards=4)
+    try:
+        parts = {r[0] for r in spark.sql(f"SHOW PARTITIONS {idx}").collect()}
+        res = api.force_merge(spark, idx, max_num_segments=1)
+        assert res == {"index": idx, "rows": 30, "segments": 1}
+        assert {r[0] for r in
+                spark.sql(f"SHOW PARTITIONS {idx}").collect()} == parts
+        assert api.routing_meta(spark, idx) == {"col": "lang", "shards": 4}
+        out = api.delete_by_query(spark, idx, "lang:en", text_col="lang",
+                                  routing="en")
+        assert out == {"deleted": 10, "remaining": 20}
+        assert not [t.name for t in spark.catalog.listTables()
+                    if t.name.startswith(f"{idx}__")]
+    finally:
+        api.delete_index(spark, idx)
+
+
+def test_cat_endpoints_agree_on_routed_shard_count(spark):
+    """cat_indices, cat_shards and cluster_health resolve an index's
+    shard count the same way: a routed index reports its routing
+    layout's count."""
+    import uuid
+
+    idx = f"cat_routed_{uuid.uuid4().hex[:8]}"
+    api.bulk_data_to_index(spark, _run_frame(spark), idx, id_col="doc_id",
+                           routing_col="lang", n_shards=4)
+    try:
+        cat = {r["index_name"]: r["shards"]
+               for r in api.cat_indices(spark).collect()}
+        assert cat[idx] == 4
+        assert len(api.cat_shards(spark, idx).collect()) == 4
+        assert api.cluster_health(spark)["active_shards"] == sum(cat.values())
+    finally:
+        api.delete_index(spark, idx)
+
+
+def test_by_query_deletes_what_count_counts(spark):
+    """_delete_by_query?q= selects its rows like _search?q= and
+    _count?q=: the mapped analyzer applies (english stems "runs" to
+    "run"), and a fuzzy clause expands against the index vocabulary."""
+    import uuid
+
+    idx = f"dbq_mapped_{uuid.uuid4().hex[:8]}"
+    api.bulk_data_to_index(spark, _run_frame(spark), idx, id_col="doc_id")
+    try:
+        api.put_mapping(spark, idx, {"text": "english"})
+        n_fuzzy = api.get_index_data_count(spark, idx, "slaw~1")
+        assert n_fuzzy == 10
+        assert api.delete_by_query(spark, idx, "slaw~1") == {
+            "deleted": 10, "remaining": 20}
+        n_runs = api.get_index_data_count(spark, idx, "text:runs")
+        assert n_runs == 20
+        assert api.delete_by_query(spark, idx, "text:runs") == {
+            "deleted": 20, "remaining": 0}
+    finally:
+        api.delete_index(spark, idx)

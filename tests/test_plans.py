@@ -889,8 +889,8 @@ def test_no_unpartitioned_window_over_unbounded_input(spark, sf_dir):
     """The r8-verdict ask: every unpartitioned (global) Window in the
     engine ranks a BOUNDED frame — a top-k page, a merged page union,
     or a bucket-cardinality aggregate output — never a corpus-sized
-    input.  bench.py mutes the per-query 'No Partition Defined' log
-    flood on the strength of THIS machine gate: a real unbounded
+    input.  Spark's per-query 'No Partition Defined' log flood may be
+    muted on the strength of THIS machine gate: a real unbounded
     window in any of the emitting families fails here instead of
     hiding in stderr noise.  One entry per global-window family:
     paged search (operators/search.py), hybrid fusion

@@ -745,6 +745,25 @@ def test_maxsim_null_component_scores_null(spark):
     assert rows2[1] == 4_000_000 and rows2[2] is None and rows2[3] is None
 
 
+def test_maxsim_nan_and_inf_components_score_null(spark):
+    # NaN and +-inf have no place on the int64 grid: a row carrying
+    # either scores NULL, a finite row keeps its exact score.
+    from bigdatasearchpro_spark.operators.similarity import maxsim_topk
+
+    q = [0] * 64
+    q[0:8] = [1000] * 8
+    nan_row, inf_row, neg_inf_row = [0.5] * 64, [0.5] * 64, [0.5] * 64
+    nan_row[3] = float("nan")
+    inf_row[3] = float("inf")
+    neg_inf_row[40] = float("-inf")
+    emb = spark.createDataFrame(
+        [(1, [0.5] * 64), (2, nan_row), (3, inf_row), (4, neg_inf_row)],
+        "vec_id long, embedding array<float>",
+    )
+    rows = {r.vec_id: r.maxsim for r in maxsim_topk(emb, q, 4).collect()}
+    assert rows == {1: 4_000_000, 2: None, 3: None, 4: None}
+
+
 def test_sparse_vector_shape_and_scoring(spark):
     from bigdatasearchpro_spark.operators.similarity import (
         sparse_vector_column, sparse_vector_topk,

@@ -5,7 +5,7 @@ result against ``oracle_sql()`` executed by DuckDB: row count, column
 names, and order-insensitive value multiset. Queries without an oracle
 get a rows-only sanity check (runs + schema is stable).
 
-Usage: python tools/parity.py [sf_dir] [query_name ...]
+Usage: python tools/parity.py [sf_dir] [query_name ...]  (-h / --help: this line)
 """
 
 from __future__ import annotations
@@ -155,10 +155,19 @@ def compare(name: str, spark, con, sf_dir: str) -> tuple[bool, str]:
     return True, f"OK {len(s_rows)} rows (spark {t_spark:.1f}s, duck {t_duck:.1f}s)"
 
 
+USAGE = "usage: python tools/parity.py [sf_dir] [query_name ...]"
+
+
 def main():
     args = [a for a in sys.argv[1:]]
+    if any(a in ("-h", "--help") for a in args):
+        print(USAGE)
+        return
     sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.001"
     names = args or list(QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown entry name(s): {', '.join(unknown)}\n{USAGE}")
 
     spark = get_spark("parity")
     con = duckdb.connect()
