@@ -119,8 +119,6 @@ def resolve_index(spark: SparkSession, index_name: str) -> DataFrame:
     where it lives; ``_all`` stays local-only, like ES)."""
     alias, sep, rest = index_name.partition(":")
     if sep and alias in _REMOTE_CLUSTERS:
-        import os as _os
-
         from bigdatasearchpro_spark.sources.files import load_table
 
         return load_table(spark, _REMOTE_CLUSTERS[alias], rest)
@@ -678,19 +676,12 @@ def scroll(
     coordination.  The slice predicate (portable md5 hash % max) is
     one more pushed filter — each worker's pages stay keyset-priced,
     and the hash is the engine's cross-replayable md5 form."""
-    from bigdatasearchpro_spark.operators.querystring import query_string_filter
     from pyspark.sql import functions as F
 
-    docs = spark.table(transform.normalize_index_name(index_name))
-    if query:
-        fields = (
-            [text_col]
-            if isinstance(text_col, str)
-            else list(text_col)
-            if text_col is not None
-            else search.all_string_cols(docs)
-        )
-        docs = query_string_filter(docs, query, default_field=fields, fields=fields)
+    docs = (
+        _match(spark, index_name, query, text_col)[0] if query
+        else resolve_index(spark, index_name)
+    )
     if slice_spec is not None:
         from bigdatasearchpro_spark.operators.neardup import portable_hash_long
 
@@ -740,7 +731,7 @@ def reindex(
     response's count field)."""
     docs = (
         _match(spark, source_index, query, text_col)[0] if query
-        else spark.table(transform.normalize_index_name(source_index))
+        else resolve_index(spark, source_index)
     )
     # a ROUTED source's __shard is a DERIVED partition column, not
     # document payload — ES _reindex doesn't copy _routing either;
@@ -1454,8 +1445,6 @@ def field_caps(spark: SparkSession, index_names) -> DataFrame:
     indices carry it, so conflicts are visible instead of merged away.
 
     Catalog-sized: reads schemas only, never data."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     if isinstance(index_names, str):
         index_names = [index_names]
     if not index_names:
@@ -1571,10 +1560,7 @@ def validate_query(
     ``{"valid": bool, "explanation": ...}``. With an index the
     compiled predicate is resolved against the actual schema (unknown
     fields and malformed clauses are reported, not thrown)."""
-    from bigdatasearchpro_spark.operators.querystring import (
-        parse_query_string,
-        query_string_filter,
-    )
+    from bigdatasearchpro_spark.operators.querystring import parse_query_string
 
     try:
         node = parse_query_string(query)
@@ -1583,18 +1569,7 @@ def validate_query(
     if index_name is None:
         return {"valid": True, "explanation": repr(node)}
     try:
-        docs = spark.table(transform.normalize_index_name(index_name))
-        fields = (
-            [text_col]
-            if isinstance(text_col, str)
-            else list(text_col)
-            if text_col is not None
-            else search.all_string_cols(docs)
-        )
-        probe = query_string_filter(
-            docs, query, default_field=fields, fields=fields
-        )
-        probe.schema  # force analysis
+        _match(spark, index_name, query, text_col)[0].schema  # force analysis
     except Exception as e:
         return {"valid": False, "explanation": str(e)}
     return {"valid": True, "explanation": repr(node)}

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bigdatasearchpro_spark.operators.analyzers import analyzer_tokens
 from bigdatasearchpro_spark.operators.search import TextCols, tokens_expr
 
 __all__ = [
@@ -486,12 +487,7 @@ def domain_token_budget(
     if not budgets:
         raise ValueError("domain_token_budget needs at least one budget")
     if tokenizer == "analyzer":
-        toks = F.size(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda t: t != "",
-            )
-        )
+        toks = F.size(analyzer_tokens(F.col(text_col)))
     elif tokenizer == "bpe":
         from bigdatasearchpro_spark.functions.bpe import bpe_token_count
 
@@ -619,10 +615,9 @@ def gopher_rules(
 
     Output: ``(id, n_words, r_word_count, r_mean_word_len, r_symbol,
     r_alpha, r_stopwords, keep)`` with ``keep`` the conjunction."""
-    t = F.trim(F.col(text_col))
     staged = df.select(
         F.col(id_col),
-        F.filter(F.split(t, r"\s+"), lambda x: x != "").alias("__w"),
+        analyzer_tokens(F.col(text_col), "whitespace").alias("__w"),
     )
     w = F.col("__w")
     n_words = F.size(w)
@@ -1008,10 +1003,7 @@ def length_bucketed_batches(
     """
     if batch_size < 1:
         raise ValueError("batch_size must be >= 1")
-    toks = F.size(
-        F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
-                 lambda t: t != "")
-    )
+    toks = F.size(analyzer_tokens(F.col(text_col), "whitespace"))
     base = docs.select(
         F.col(shard_col).alias("shard"),
         F.col(id_col),
@@ -1118,11 +1110,7 @@ def shuffle_shards(
         ).cast("long"),
         F.lit(int(n_shards)),
     )
-    n_tokens = F.size(
-        F.filter(
-            F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
-        )
-    )
+    n_tokens = F.size(analyzer_tokens(F.col(text_col), "whitespace"))
     return docs.select(
         F.col(id_col),
         shard.alias("shard"),
@@ -1193,9 +1181,7 @@ def tokenizer_fertility(
     """
     from bigdatasearchpro_spark.functions.bpe import bpe_token_count
 
-    ws = F.size(
-        F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
-    )
+    ws = F.size(analyzer_tokens(F.col(text_col), "whitespace"))
     base = docs.select(
         F.col(group_col),
         bpe_token_count(F.col(text_col)).alias("__bpe"),

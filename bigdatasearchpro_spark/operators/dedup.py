@@ -45,7 +45,6 @@ def dedup_last_write_wins(
     order_by: Sequence[str],
     *,
     keep: str = "last",
-    materialize: bool = False,
 ) -> DataFrame:
     """Keep exactly one row per ``key``, deterministically.
 
@@ -53,7 +52,12 @@ def dedup_last_write_wins(
     last-write-wins for repeated ``_id``; ``keep='first'`` gives
     keep-oldest. Ties on the full ``order_by`` vector break by content
     fingerprint (largest xxhash64 of the row), so the survivor set is
-    deterministic across runs, partitionings, and task retries.
+    deterministic across runs, partitionings, and task retries — for
+    an input that reads the same on every scan.  The input is scanned
+    more than once (the candidates, each reduction step, the final
+    semi-join); a source that can change between scans (a table
+    written concurrently, a nondeterministic upstream) must be
+    persisted or checkpointed by the caller first.
 
     Implementation (the 100 TB shape): the winner per key is chosen on
     a NARROW projection — ``(key, order columns, fingerprint)``, a few
@@ -123,26 +127,12 @@ def dedup_last_write_wins(
     fp = F.xxhash64(
         *[x for c in df.columns for x in (F.col(c).isNull(), F.col(c))]
     )
-    # The input is scanned more than once (the candidates, each
-    # reduction step, the final semi-join), with or without
-    # ``materialize``: the result is deterministic only for an input
-    # that reads the same on every scan. A source that can change
-    # between scans (a table written concurrently, a nondeterministic
-    # upstream) must be persisted or checkpointed by the caller first.
-    # ``materialize`` (r13, reverting the r12 default): the r12 round
-    # persisted the narrow candidates + checkpointed the winner table
-    # unconditionally, on an A/B that measured the ETL chain 8.5->5.4 s
-    # — but that trade was an artifact of the G1 allocation contention
-    # fixed in session.py this round: re-measured under the throughput
-    # collector (4 interleaved rounds at matched calibration), the
-    # LAZY plan wins on BOTH the wide 17-column ETL chain (3.5-3.7 s vs
-    # 4.6-5.1 s, ~1.35x) and the thin l1 fixture (3.18 vs 4.41 s), so
-    # lazy is the default again.  The knob remains for deployments
-    # where re-deriving the candidates is costlier than caching them —
-    # re-computation re-scans the FULL input (the fingerprint hashes
-    # every column, so nothing prunes) (order_by)+2 times, so a corpus
-    # on cold object storage with cheap local cache disk should pass
-    # materialize=True; a fast-scan/slow-disk installation should not.
+    # The plan stays lazy: the candidates re-derive from the input at
+    # each scan rather than being persisted.  Under the throughput
+    # collector the lazy plan beat persisting the candidates and
+    # checkpointing the winner table on both the wide 17-column ETL
+    # chain (3.5-3.7 s vs 4.6-5.1 s) and the thin l1 fixture (3.18 vs
+    # 4.41 s).
     auto = isinstance(df.schema[key].dataType, T.StringType)
 
     def auto_id(fp_col):
@@ -154,8 +144,6 @@ def dedup_last_write_wins(
     cand = df.select(
         keyed(fp).alias(key), fp.alias("__fp"), *[F.col(c) for c in order_by]
     )
-    if materialize:
-        cand = cand.persist()
     reduced = cand
     for c in order_by:
         ext = reduced.groupBy(key).agg(ext_fn(c).alias("__m"))
@@ -165,9 +153,6 @@ def dedup_last_write_wins(
             .drop("__m")
         )
     winners = reduced.groupBy(key).agg(ext_fn("__fp").alias("__fp"))
-    if materialize:
-        winners = winners.localCheckpoint(eager=True)
-        cand.unpersist()
     kept = (
         df.withColumn("__fp", fp)
         .withColumn(key, keyed(F.col("__fp")))

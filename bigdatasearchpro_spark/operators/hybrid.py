@@ -20,11 +20,11 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdatasearchpro_spark.operators.search import search_topk
+from bigdatasearchpro_spark.operators.similarity import int8_dot_norm_udf
 
 
 def vector_rank_page(
@@ -36,53 +36,14 @@ def vector_rank_page(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-``window`` vectors by cosine to an integer query vector,
-    with their 1-based rank.  The corpus side is int8-quantized and
-    the dot/norm are BIGINT (the semantic-dedup arithmetic, one
-    Arrow-batched numpy pass); the sort key ``dot / sqrt(n)`` divides
-    an exact integer by a correctly-rounded sqrt of an exact integer,
-    so it is bit-identical in any IEEE engine — ranks are replayable.
-    The page selection is a TakeOrdered (per-partition heaps), and the
-    row_number window runs over the already-collected ``window`` rows,
-    never the corpus.  Output: ``(id, vec_rank)``."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    qi = [int(v) for v in query_ints]
-    if not any(qi):
-        raise ValueError("query vector must be non-zero")
-    qv = np.asarray(qi, dtype=np.int64)
-
-    def dot_norm(batch):
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in batch])
-        amax = np.abs(m).max(axis=1, keepdims=True)
-        scale = np.where(amax > 0, amax / 127.0, 1.0)
-        q = np.clip(np.floor(m / scale + 0.5), -127, 127).astype(np.int64)
-        return pd.DataFrame({"dot": q @ qv, "n": (q * q).sum(axis=1)})
-
-    # asNondeterministic: the zero-vector filter below references the
-    # UDF's output column, and Catalyst pushes that filter BELOW the
-    # projection by re-evaluating the UDF a second time (two
-    # ArrowEvalPython nodes — the whole corpus quantize+matmul ran
-    # twice; guide-documented filter-on-UDF-column duplication).  The
-    # function is pure, so results are unchanged; the mark only stops
-    # the optimizer from duplicating it.
-    dn = pandas_udf(dot_norm, "struct<dot:long,n:long>").asNondeterministic()
-    page = (
-        emb.select(F.col(id_col), dn(F.col(vec_col)).alias("__dn"))
-        # n = 0 (a zero vector) would make the sort key 0/0 = NaN, and
-        # engines DISAGREE on NaN sort position — drop it as unrankable
-        .filter(F.col("__dn.n") > 0)
-        .select(
-            F.col(id_col),
-            (
-                F.col("__dn.dot").cast("double")
-                / F.sqrt(F.col("__dn.n").cast("double"))
-            ).alias("__cos"),
-        )
-        .orderBy(F.desc("__cos"), F.asc(id_col))
-        .limit(window)
+    with their 1-based rank: :func:`vector_score_page` (replayable
+    scores, so replayable ranks) plus a row_number that runs over the
+    already-collected ``window`` rows, never the corpus.  Output:
+    ``(id, vec_rank)``."""
+    page = vector_score_page(
+        emb, query_ints, window, id_col=id_col, vec_col=vec_col
     )
-    w = Window.orderBy(F.desc("__cos"), F.asc(id_col))
+    w = Window.orderBy(F.desc("cos"), F.asc(id_col))
     # long, not int: SQL engines type row_number as BIGINT
     return page.select(
         F.col(id_col),
@@ -151,32 +112,21 @@ def vector_score_page(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-``window`` vectors by int8-exact cosine WITH the score
-    (``(id, cos)``) — the score-carrying sibling of
-    :func:`vector_rank_page` for normalizer-based fusion.  Same
-    single Arrow pass + TakeOrdered plan; ``cos = dot / sqrt(n)``
+    (``(id, cos)``), for rank- and normalizer-based fusion alike.  The
+    corpus side is int8-quantized and the dot/norm are BIGINT (the
+    semantic-dedup arithmetic, one Arrow-batched numpy pass:
+    :func:`similarity.int8_dot_norm_udf`); ``cos = dot / sqrt(n)``
     divides an exact integer by a correctly-rounded sqrt of an exact
-    integer — bit-identical in any IEEE engine."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+    integer — bit-identical in any IEEE engine.  The page selection is
+    a TakeOrdered (per-partition heaps)."""
     qi = [int(v) for v in query_ints]
     if not any(qi):
         raise ValueError("query vector must be non-zero")
-    qv = np.asarray(qi, dtype=np.int64)
-
-    def dot_norm(batch):
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in batch])
-        amax = np.abs(m).max(axis=1, keepdims=True)
-        scale = np.where(amax > 0, amax / 127.0, 1.0)
-        q = np.clip(np.floor(m / scale + 0.5), -127, 127).astype(np.int64)
-        return pd.DataFrame({"dot": q @ qv, "n": (q * q).sum(axis=1)})
-
-    # asNondeterministic: same filter-on-UDF-column duplication as
-    # vector_rank_page — without it the zero-vector filter re-evaluates
-    # the UDF below the projection (two corpus-wide Arrow passes).
-    dn = pandas_udf(dot_norm, "struct<dot:long,n:long>").asNondeterministic()
+    dn = int8_dot_norm_udf(qi)
     return (
         emb.select(F.col(id_col), dn(F.col(vec_col)).alias("__dn"))
+        # n = 0 (a zero vector) would make the sort key 0/0 = NaN, and
+        # engines DISAGREE on NaN sort position — drop it as unrankable
         .filter(F.col("__dn.n") > 0)
         .select(
             F.col(id_col),

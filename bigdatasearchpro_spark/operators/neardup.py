@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdatasearchpro_spark.operators.analyzers import analyzer_tokens
+
 # --- portable hash family -------------------------------------------------
 # The default signature hash is xxhash64 (fastest JVM path) but it has no
 # twin outside Spark. The "portable" family below — a 60-bit integer from
@@ -67,9 +69,9 @@ def word_ngrams(tokens: Column, n: int = 3) -> Column:
     """Distinct word n-grams over a *materialized* token-array column.
 
     Callers must alias the tokenization into its own projection first
-    (see :func:`tokenize_words`): passing a raw ``split(...)`` expression
-    here would re-inline the split at every element access — the
-    sequence/transform below reads ``tokens`` ~3n times per row.
+    (see :func:`ngram_jaccard_pairs`): passing a raw ``split(...)``
+    expression here would re-inline the split at every element access —
+    the sequence/transform below reads ``tokens`` ~3n times per row.
     """
     cnt = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(1))
     return F.array_distinct(
@@ -78,16 +80,6 @@ def word_ngrams(tokens: Column, n: int = 3) -> Column:
             lambda i: F.concat_ws(" ", *[tokens[i + j] for j in range(n)]),
         )
     )
-
-
-def tokenize_words(text: Column, *, token_re: str | None = None) -> Column:
-    """Lowercased word tokens (empty strings removed); defaults to the
-    shared analyzer pattern (operators/search.TOKEN_SPLIT_RE)."""
-    if token_re is None:
-        from bigdatasearchpro_spark.operators.search import TOKEN_SPLIT_RE
-
-        token_re = TOKEN_SPLIT_RE
-    return F.filter(F.split(F.lower(text), token_re), lambda t: t != "")
 
 
 def exploded_shingles(
@@ -366,7 +358,6 @@ def simhash_signatures(
     lets the whole SimHash pipeline be oracle-verified
     (:func:`portable_simhash_oracle_sql`).
     """
-    from bigdatasearchpro_spark.operators.search import TOKEN_SPLIT_RE
     from bigdatasearchpro_spark.sources.files import fan_out
 
     if impl not in ("packed", "wide"):
@@ -374,18 +365,19 @@ def simhash_signatures(
     if hash_fn not in ("xxhash64", "portable"):
         raise ValueError(f"unknown hash_fn: {hash_fn!r}")
     n_bits = SIMHASH_BITS[hash_fn]
-    if token_re is None:
-        token_re = TOKEN_SPLIT_RE
     tok_hash = (
         portable_hash_long(F.col("__t"))
         if hash_fn == "portable"
         else F.xxhash64(F.col("__t"))
     )
+    text = F.col(text_col)
+    toks = (
+        analyzer_tokens(text)
+        if token_re is None
+        else F.filter(F.split(F.lower(text), token_re), lambda t: t != "")
+    )
     toked = fan_out(docs).select(
-        F.col(id_col),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), token_re), lambda t: t != "")
-        ).alias("__t"),
+        F.col(id_col), F.explode(toks).alias("__t")
     ).withColumn("__h", tok_hash)
 
     def sig_bit(bit: int) -> int:
@@ -799,7 +791,7 @@ def ngram_jaccard_pairs(
     docs = fan_out(docs)
     extra = [F.col(block_col)] if block_col else []
     toked = docs.select(
-        F.col(id_col), tokenize_words(F.col(text_col)).alias("__t"), *extra
+        F.col(id_col), analyzer_tokens(F.col(text_col)).alias("__t"), *extra
     )
     grams = toked.select(
         F.col(id_col),

@@ -43,6 +43,7 @@ from bigdatasearchpro_spark.operators.search import (
     analyze_query,
     phrase_expr,
     proximity_expr,
+    range_expr,
     tokens_expr,
     wildcard_to_like,
 )
@@ -428,23 +429,9 @@ def compile_predicate(
             like = wildcard_to_like(n.pattern)
             return F.exists(toks(n.field), lambda t: t.like(like))
         if isinstance(n, Range):
-            lo = n.lo.lower() if n.lo is not None else None
-            hi = n.hi.lower() if n.hi is not None else None
-
-            def pred(t):
-                conds = []
-                if lo is not None:
-                    conds.append(t >= lo if n.include_lo else t > lo)
-                if hi is not None:
-                    conds.append(t <= hi if n.include_hi else t < hi)
-                if not conds:
-                    return F.lit(True)
-                out = conds[0]
-                for c in conds[1:]:
-                    out = out & c
-                return out
-
-            return F.exists(toks(n.field), pred)
+            return range_expr(
+                toks(n.field), n.lo, n.hi, n.include_lo, n.include_hi
+            )
         if isinstance(n, Exists):
             # ES `_exists_:f` — the field has a non-null value. Nested
             # dotted paths resolve like any scoped clause (a JSON path
@@ -559,6 +546,28 @@ def query_string_predicate(
     vocabulary, dotted paths resolve against its schema.  The
     ``_delete_by_query`` / ``_update_by_query`` writes select their
     rows with it, so they act on exactly what ``_search?q=`` finds."""
+    return _compile_ast(
+        docs, parse_query_string(q), default_field=default_field,
+        fields=fields, minimum_should_match=minimum_should_match,
+        analyzer=analyzer, field_analyzers=field_analyzers,
+    )
+
+
+def _compile_ast(
+    docs: DataFrame,
+    node,
+    *,
+    default_field: "str | Sequence[str] | None" = None,
+    fields: Optional[Sequence[str]] = None,
+    minimum_should_match: int = 0,
+    analyzer: str = "standard",
+    field_analyzers: "dict[str, str] | None" = None,
+) -> Column:
+    """Compile a parsed query (either grammar's AST) against ``docs``:
+    the field list and default field (both default to every string
+    column), fuzzy expansion over ``docs``' vocabulary, dotted paths
+    over its schema, and ``minimum_should_match`` on a top-level
+    disjunction.  The one place a query's AST meets a document set."""
     valid = list(fields) if fields is not None else all_string_cols(docs)
     if default_field is None:
         default = valid
@@ -566,33 +575,23 @@ def query_string_predicate(
         default = [default_field]
     else:
         default = list(default_field)
-    node = parse_query_string(q)
 
     def resolver(term: str, max_edits: int, cols) -> list[str]:
         from bigdatasearchpro_spark.operators.search import fuzzy_vocab_terms
 
         return fuzzy_vocab_terms(docs, term, max_edits=max_edits, text_col=cols)
 
-    nested = dotted_path_resolver(docs)
-
-    if minimum_should_match > 1 and isinstance(node, Or):
-        indicators = [
-            F.when(
-                compile_predicate(
-                    c, default_cols=default, valid_fields=valid,
-                    fuzzy_resolver=resolver, nested_resolver=nested,
-                    analyzer=analyzer, field_analyzers=field_analyzers,
-                ),
-                1,
-            ).otherwise(0)
-            for c in node.children
-        ]
-        return sum(indicators[1:], indicators[0]) >= F.lit(minimum_should_match)
-    return compile_predicate(
-        node, default_cols=default, valid_fields=valid,
-        fuzzy_resolver=resolver, nested_resolver=nested,
+    compile_one = functools.partial(
+        compile_predicate, default_cols=default, valid_fields=valid,
+        fuzzy_resolver=resolver, nested_resolver=dotted_path_resolver(docs),
         analyzer=analyzer, field_analyzers=field_analyzers,
     )
+    if minimum_should_match > 1 and isinstance(node, Or):
+        indicators = [
+            F.when(compile_one(c), 1).otherwise(0) for c in node.children
+        ]
+        return sum(indicators[1:], indicators[0]) >= F.lit(minimum_should_match)
+    return compile_one(node)
 
 
 def weighted_terms(node, analyzer: str = "standard") -> list[tuple[str, float]]:
@@ -809,31 +808,12 @@ def simple_query_string_filter(
     span, no explode/join.  Unlike ``query_string`` there is no field
     scoping inside the query; ``fields``/``default_field`` select the
     searched columns."""
-    from bigdatasearchpro_spark.operators.search import (
-        all_string_cols,
-        fuzzy_vocab_terms,
-    )
+    from bigdatasearchpro_spark.sources.files import fan_out
 
-    valid = list(fields) if fields is not None else all_string_cols(docs)
-    if default_field is None:
-        default = valid
-    elif isinstance(default_field, str):
-        default = [default_field]
-    else:
-        default = list(default_field)
     node = parse_simple_query_string(q, default_operator=default_operator)
     if isinstance(node, Or) and not node.children:
         return docs.limit(0)
-
-    def resolver(term: str, max_edits: int, cols) -> list[str]:
-        return fuzzy_vocab_terms(docs, term, max_edits=max_edits,
-                                 text_col=cols)
-
-    pred = compile_predicate(
-        node, default_cols=default, valid_fields=valid,
-        fuzzy_resolver=resolver, nested_resolver=dotted_path_resolver(docs),
+    return fan_out(docs).filter(_compile_ast(
+        docs, node, default_field=default_field, fields=fields,
         analyzer=analyzer,
-    )
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    return fan_out(docs).filter(pred)
+    ))

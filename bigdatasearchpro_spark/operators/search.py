@@ -61,9 +61,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# ES standard-analyzer-alike: lowercase, split on any non-alphanumeric run.
-TOKEN_SPLIT_RE = "[^a-z0-9]+"
-
 TextCols = "str | Sequence[str]"
 
 
@@ -1104,25 +1101,35 @@ def range_query(
 
     ``None`` bounds are open (ES ``*``). One narrow ``exists`` filter.
     """
-    lo_n = lo.lower() if lo is not None else None
-    hi_n = hi.lower() if hi is not None else None
+    from bigdatasearchpro_spark.sources.files import fan_out
+
+    return fan_out(docs).filter(
+        range_expr(tokens_expr(text_col), lo, hi, include_lo, include_hi)
+    ).select(id_col)
+
+
+def range_expr(
+    tokens: Column,
+    lo: str | None,
+    hi: str | None,
+    include_lo: bool = True,
+    include_hi: bool = True,
+) -> Column:
+    """Any of ``tokens`` lexicographically inside the (lowercased)
+    bounds; ``None`` is open. Shared by :func:`range_query` and the
+    query-string ``Range`` clause."""
+    lo = lo.lower() if lo is not None else None
+    hi = hi.lower() if hi is not None else None
 
     def pred(t):
         conds = []
-        if lo_n is not None:
-            conds.append(t >= lo_n if include_lo else t > lo_n)
-        if hi_n is not None:
-            conds.append(t <= hi_n if include_hi else t < hi_n)
-        if not conds:
-            return F.lit(True)
-        out = conds[0]
-        for c in conds[1:]:
-            out = out & c
-        return out
+        if lo is not None:
+            conds.append(t >= lo if include_lo else t > lo)
+        if hi is not None:
+            conds.append(t <= hi if include_hi else t < hi)
+        return reduce(operator.and_, conds) if conds else F.lit(True)
 
-    from bigdatasearchpro_spark.sources.files import fan_out
-
-    return fan_out(docs).filter(F.exists(tokens_expr(text_col), pred)).select(id_col)
+    return F.exists(tokens, pred)
 
 
 def wildcard_to_like(pattern: str) -> str:

@@ -461,6 +461,40 @@ def quantize_int8(
     )
 
 
+def quantize_int8_rows(batch) -> np.ndarray:
+    """The numpy twin of :func:`quantize_int8` over a batch of vectors
+    (an Arrow column's values, or a list of arrays): one int64 code row
+    per vector.  numpy float64 division/floor/clip are IEEE-identical
+    to the expression form, so every Arrow-batched int8 pass and its
+    DuckDB oracle agree bit for bit."""
+    m = np.stack([np.asarray(x, dtype=np.float64) for x in batch])
+    amax = np.abs(m).max(axis=1, keepdims=True)
+    scale = np.where(amax > 0, amax / 127.0, 1.0)
+    return np.clip(np.floor(m / scale + 0.5), -127, 127).astype(np.int64)
+
+
+def int8_dot_norm_udf(query_ints: Sequence[int]):
+    """The int8 vector kernel: an Arrow-batched UDF mapping each vector
+    to ``struct<dot, n>`` — its int8 codes' exact BIGINT dot with the
+    integer query and squared norm (one quantize + matmul per batch).
+
+    Marked nondeterministic: every caller filters on the UDF's output
+    fields, and Catalyst pushes such a filter below the projection by
+    RE-EVALUATING the UDF (two ArrowEvalPython nodes, the corpus-wide
+    quantize + matmul run twice).  The function is pure, so results
+    are unchanged; the mark only stops the optimizer duplicating it."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    qv = np.asarray([int(v) for v in query_ints], dtype=np.int64)
+
+    def dot_norm(batch):
+        q = quantize_int8_rows(batch)
+        return pd.DataFrame({"dot": q @ qv, "n": (q * q).sum(axis=1)})
+
+    return pandas_udf(dot_norm, "struct<dot:long,n:long>").asNondeterministic()
+
+
 def dequantize(quant: DataFrame) -> DataFrame:
     """Inverse of :func:`quantize_int8`: ``v_i ~= q_i * scale`` (the
     reconstruction ANN re-ranking uses before exact re-scoring)."""
@@ -729,10 +763,7 @@ def ivf_range_prune(
     ut = unit.T.copy()
 
     def cell_vcos(batch):
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in batch])
-        amax = np.abs(m).max(axis=1, keepdims=True)
-        scale = np.where(amax > 0, amax / 127.0, 1.0)
-        q = np.clip(np.floor(m / scale + 0.5), -127, 127)
+        q = quantize_int8_rows(batch)
         s = q @ ut
         cell = s.argmax(axis=1)
         qn = np.sqrt((q * q).sum(axis=1))
@@ -810,14 +841,10 @@ def cosine_range_search_int8(
     predicate runs on the survivors — the member set is provably
     identical to the full scan (screening is a superset; pytest-gated),
     only the bytes read change."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     qi = [int(v) for v in query_ints]
     qnorm = sum(v * v for v in qi)
     if qnorm == 0:
         raise ValueError("query vector must be non-zero")
-    qv = np.asarray(qi, dtype=np.int64)
     if centroids is not None:
         assigned, cells = ivf_range_prune(
             emb, qi, centroids,
@@ -826,21 +853,7 @@ def cosine_range_search_int8(
         keep = F.col("__cell").isin(cells) if cells else F.lit(False)
         emb = assigned.filter(keep).drop("__cell")
 
-    def dot_norm(batch):
-        m = np.stack(
-            [np.asarray(x, dtype=np.float64) for x in batch]
-        )
-        amax = np.abs(m).max(axis=1, keepdims=True)
-        scale = np.where(amax > 0, amax / 127.0, 1.0)
-        q = np.clip(np.floor(m / scale + 0.5), -127, 127).astype(np.int64)
-        return pd.DataFrame({"dot": q @ qv, "n": (q * q).sum(axis=1)})
-
-    # asNondeterministic: the range predicate below references the
-    # UDF's output fields, and Catalyst pushes that filter below the
-    # projection by RE-EVALUATING the UDF (two ArrowEvalPython nodes =
-    # the quantize+dot pass ran twice per row).  The function is pure;
-    # the mark only stops the optimizer duplicating it.
-    dn = pandas_udf(dot_norm, "struct<dot:long,n:long>").asNondeterministic()
+    dn = int8_dot_norm_udf(qi)
     q = emb.select(F.col(id_col), F.col(vec_col).alias("q"))
     return (
         q.select(F.col(id_col), dn(F.col("q")).alias("__dn"))
@@ -1193,22 +1206,13 @@ def embedding_decontaminate_int8(
         )
     rows = benchmark.select(vec_col).collect()
 
-    def _quant(vec) -> np.ndarray:
-        v = np.asarray(vec, dtype=np.float64)
-        amax = np.abs(v).max()
-        scale = amax / 127.0 if amax > 0 else 1.0
-        return np.clip(np.floor(v / scale + 0.5), -127, 127).astype(np.int64)
-
-    B = np.stack([_quant(r[0]) for r in rows])          # (Bn, d) int64
+    B = quantize_int8_rows([r[0] for r in rows])        # (Bn, d) int64
     bnorm = (B * B).sum(axis=1)                         # (Bn,)
     Bt = B.T.copy()
     tn, td = int(thr_num), int(thr_den)
 
     def n_matches(batch):
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in batch])
-        amax = np.abs(m).max(axis=1, keepdims=True)
-        scale = np.where(amax > 0, amax / 127.0, 1.0)
-        q = np.clip(np.floor(m / scale + 0.5), -127, 127).astype(np.int64)
+        q = quantize_int8_rows(batch)
         dots = q @ Bt                                    # (n, Bn)
         vnorm = (q * q).sum(axis=1, keepdims=True)       # (n, 1)
         ok = (dots > 0) & (td * dots * dots >= tn * vnorm * bnorm[None, :])

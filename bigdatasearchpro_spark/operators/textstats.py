@@ -12,12 +12,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# The ONE analyzer pattern (ES-standard-alike) shared by search, dedup,
-# and text stats — oracle parity and cross-operator token consistency
-# depend on every consumer using this constant, not a restated literal.
-from bigdatasearchpro_spark.operators.search import TOKEN_SPLIT_RE
+# The ONE tokenizer (ES-standard-alike, or whitespace) shared by search,
+# dedup and text stats — oracle parity and cross-operator token
+# consistency depend on every consumer calling it, not a restated split.
+from bigdatasearchpro_spark.operators.analyzers import analyzer_tokens
 
-WORD_SPLIT_RE = r"\s+"
 # BPE-ish pre-tokenizer: word pieces, numbers, or single non-space symbols
 # (a simplification of the GPT-2 pre-tokenizer regex, public knowledge).
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -38,7 +37,7 @@ def punct_ratio(text: Column) -> Column:
 
 
 def stopword_ratio(text: Column) -> Column:
-    toks = F.filter(F.split(F.lower(F.trim(text)), TOKEN_SPLIT_RE), lambda t: t != "")
+    toks = analyzer_tokens(text)
     stops = F.filter(toks, lambda t: t.isin(*STOPWORDS))
     return F.when(F.size(toks) > 0, F.size(stops) / F.size(toks)).otherwise(0.0)
 
@@ -62,10 +61,8 @@ def quality_stats(
     staged = df.select(
         F.col(id_col),
         t.alias("__t"),
-        F.filter(F.split(F.trim(t), WORD_SPLIT_RE), lambda x: x != "").alias("__w"),
-        F.filter(
-            F.split(F.lower(F.trim(t)), TOKEN_SPLIT_RE), lambda x: x != ""
-        ).alias("__a"),
+        analyzer_tokens(t, "whitespace").alias("__w"),
+        analyzer_tokens(t).alias("__a"),
     )
     w, a = F.col("__w"), F.col("__a")
     mean_wl = F.when(
@@ -106,9 +103,7 @@ def lang_id(
     df = fan_out(df)
     staged = df.select(
         F.col(id_col),
-        F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != ""
-        ).alias("__a"),
+        analyzer_tokens(F.col(text_col)).alias("__a"),
     )
     toks = F.col("__a")
     # negated hits + ascending sort: most hits first, and among equal
@@ -249,9 +244,7 @@ def repetition_stats(
     map-side partials; shuffle carries (doc, word, n), never text."""
     toks = df.select(
         F.col(id_col),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != "")
-        ).alias("__w"),
+        F.explode(analyzer_tokens(F.col(text_col))).alias("__w"),
     )
     per_word = toks.groupBy(id_col, "__w").agg(F.count("*").alias("__n"))
     return per_word.groupBy(id_col).agg(
@@ -409,9 +402,7 @@ def vocab_topk(
     |vocab|-bounded, which is millions, not corpus-sized.
     """
     toks = df.select(
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != "")
-        ).alias("term")
+        F.explode(analyzer_tokens(F.col(text_col))).alias("term")
     )
     return (
         toks.groupBy("term")
@@ -439,9 +430,7 @@ def cms_sketch(
     the exact |vocab|-sized aggregate (vocab_topk) answers at small
     scale."""
     toks = df.select(
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != "")
-        ).alias("term")
+        F.explode(analyzer_tokens(F.col(text_col))).alias("term")
     )
     rows = toks.select(
         F.explode(
@@ -531,9 +520,7 @@ def bigram_lm_scores(
     """
     toked = df.select(
         F.col(id_col),
-        F.filter(
-            F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE), lambda t: t != ""
-        ).alias("__t"),
+        analyzer_tokens(F.col(text_col)).alias("__t"),
     )
     bigrams = toked.select(
         F.col(id_col),
@@ -687,11 +674,8 @@ def quality_logit_attach(
 
     df = fan_out(df)
     t = F.col(text_col)
-    staged = df.withColumn(
-        "__q_w", F.filter(F.split(F.trim(t), WORD_SPLIT_RE), lambda x: x != "")
-    ).withColumn(
-        "__q_a",
-        F.filter(F.split(F.lower(F.trim(t)), TOKEN_SPLIT_RE), lambda x: x != ""),
+    staged = df.withColumn("__q_w", analyzer_tokens(t, "whitespace")).withColumn(
+        "__q_a", analyzer_tokens(t)
     )
     w, a = F.col("__q_w"), F.col("__q_a")
     mean_wl = F.when(

@@ -2312,3 +2312,26 @@ def test_by_query_deletes_what_count_counts(spark):
             "deleted": 20, "remaining": 0}
     finally:
         api.delete_index(spark, idx)
+
+
+def test_scroll_and_validate_compile_like_search(spark, sf_dir):
+    """_search?scroll= and _validate/query resolve ``q=`` the way
+    _search and _count do: the mapped analyzer applies (english stems
+    "runs" to "run"), and a remote-cluster index resolves through its
+    alias."""
+    import uuid
+
+    idx = f"scroll_mapped_{uuid.uuid4().hex[:8]}"
+    api.bulk_data_to_index(spark, _run_frame(spark), idx, id_col="doc_id")
+    api.register_remote_cluster(spark, "rc", sf_dir)
+    try:
+        api.put_mapping(spark, idx, {"text": "english"})
+        n_runs = api.get_index_data_count(spark, idx, "text:runs")
+        assert n_runs == 30
+        page, next_id = api.scroll(spark, idx, "text:runs", size=100)
+        assert len(page.collect()) == n_runs and next_id is None
+        assert api.validate_query(spark, "data", "rc:documents")["valid"]
+        page, _ = api.scroll(spark, "rc:documents", "data", size=5)
+        assert len(page.collect()) == 5
+    finally:
+        api.delete_index(spark, idx)

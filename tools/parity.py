@@ -17,7 +17,14 @@ import sys
 import time
 from collections import Counter
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package from the environment the
+# JVM inherits, not from this process's sys.path: set it before the
+# session starts, so the tool runs from any directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 
